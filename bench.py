@@ -289,6 +289,10 @@ def main() -> None:
     # before their first timed toucher arrives; a timed query that
     # outruns the pool just stages synchronously as before.
 
+    # background-pool failures, per pool and query ("Type: message"):
+    # the timed owner re-raises, and BENCH_FULL.json keeps what the pool saw
+    bg_errors: dict[str, dict[str, str]] = {"stage_prefetch": {}, "prebuild": {}}
+
     def kickoff_stage_prefetch() -> None:
         import threading
 
@@ -306,8 +310,8 @@ def main() -> None:
                     return
                 try:
                     queries[n](spark, sf_dir)
-                except Exception:  # noqa: BLE001 — timed owner re-raises
-                    pass
+                except Exception as e:  # noqa: BLE001 — timed owner re-raises
+                    bg_errors["stage_prefetch"][n] = f"{type(e).__name__}: {e}"[:500]
 
         for _ in range(3):
             threading.Thread(target=run, daemon=True).start()
@@ -396,10 +400,11 @@ def main() -> None:
                         return
                     in_flight.add(name)
                 b0 = time.time()
+                f = None
                 try:
                     f = fn(spark, sf_dir)
-                except Exception:  # noqa: BLE001 — timed owner rebuilds
-                    f = None
+                except Exception as e:  # noqa: BLE001 — timed owner rebuilds
+                    bg_errors["prebuild"][name] = f"{type(e).__name__}: {e}"[:500]
                 with cv:
                     in_flight.discard(name)
                     done.add(name)
@@ -490,6 +495,10 @@ def main() -> None:
         # prebuilder thread (absent -> the query built inline and its
         # headline number includes construction, as in prior rounds)
         "prebuild_s": dict(sorted(prebuild_times.items())),
+        # queries whose background prefetch or prebuild raised; each was
+        # built again by its timed owner, so a real failure also reads -1
+        # in queries
+        "background_errors": {k: dict(sorted(v.items())) for k, v in bg_errors.items()},
         "load_avg_start": list(load_start),
         "load_avg_end": list(os.getloadavg()),
         "canary": canary,

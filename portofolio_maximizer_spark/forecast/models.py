@@ -818,8 +818,13 @@ def _acf_at(y: np.ndarray, lag: int) -> float:
     return float(yc[lag:] @ yc[:-lag]) / denom
 
 
+#: candidate seasonal periods of the SARIMAX autodetect (the reference's
+#: trading-calendar ladder); the staged replay computes one lag per period
+SEASONAL_PERIODS = (7, 12, 24, 52)
+
+
 def detect_seasonal_period(
-    y: np.ndarray, candidates: tuple[int, ...] = (7, 12, 24, 52)
+    y: np.ndarray, candidates: tuple[int, ...] = SEASONAL_PERIODS
 ) -> int:
     """ACF-based seasonality autodetect over the reference's candidate
     periods (`forcester_ts/sarimax.py:212-222`: trading-calendar ladder

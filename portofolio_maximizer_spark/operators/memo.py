@@ -1,4 +1,12 @@
-"""Probed localCheckpoint memoization — one registry, two consumers.
+"""Session memos: probed localCheckpoint pins and per-session frames.
+
+``session_frame_cache`` (bottom of this module) memoizes a function of
+(session, sf_dir, ...) for the session's lifetime: the engine's shared
+helper frames and the source-table frames of ``sources.catalog``. It lives
+here, below both layers, so either can import it.
+
+``memoize_checkpoint`` is the probed localCheckpoint memo — one
+registry, two consumers.
 
 A deterministic expensive frame (a drained stream, the report family's
 canonical legs superset) is built once per (application, name,
@@ -22,6 +30,9 @@ misses on the SAME key build once and share the result.
 
 from __future__ import annotations
 
+import functools
+import glob
+import os
 import threading
 
 from pyspark.sql import DataFrame
@@ -100,3 +111,58 @@ def memoize_checkpoint(spark, name: str, cache_key: str, build) -> DataFrame:
         with _LOCK:
             _INFLIGHT.pop(key, None)
         pending.set()
+
+
+def data_fingerprint(sf_dir: str) -> tuple:
+    """(file name, size, mtime_ns) of every parquet input under ``sf_dir``:
+    a rewritten input changes it, so memos keyed on it never serve frames
+    of data that is gone."""
+    return tuple(
+        (os.path.basename(p), os.path.getsize(p), os.stat(p).st_mtime_ns)
+        for p in sorted(glob.glob(os.path.join(sf_dir, "*.parquet")))
+    )
+
+
+#: per-session memo of ``session_frame_cache`` results. A key holds its
+#: SparkSession object, which pins it (so no later session can reuse its
+#: identity) until the entry is pruned: entries of stopped sessions go on
+#: the next miss.
+_FRAME_CACHE: dict = {}
+_FRAME_CACHE_LOCK = threading.Lock()
+
+
+def session_frame_cache(fn):
+    """Memoize ``fn(spark, sf_dir, *args)`` for the lifetime of the session.
+
+    The first call builds; later calls with the same session, sf_dir,
+    args and DATA FINGERPRINT return the same object without touching the
+    JVM. A new session (a child from ``newSession()`` with its own SQL
+    conf, or any session of a new application) builds its own, so a frame
+    never runs under another session's conf; a session that REWRITES the
+    parquet under an unchanged sf_dir rebuilds instead of serving a stale
+    frame. ``fn`` must be a pure function of (code, data, args).
+
+    A concurrent miss on the same key may build twice; the builds are
+    value-identical and the first insert wins."""
+
+    @functools.wraps(fn)
+    def wrap(spark, sf_dir: str, *args):
+        key = (spark, fn.__module__, fn.__qualname__, sf_dir, args, data_fingerprint(sf_dir))
+        with _FRAME_CACHE_LOCK:
+            if key in _FRAME_CACHE:
+                return _FRAME_CACHE[key]
+        # build OUTSIDE the lock: concurrent prefetch threads must not
+        # serialize on an unrelated multi-second build
+        built = fn(spark, sf_dir, *args)
+        with _FRAME_CACHE_LOCK:
+            # prune stopped sessions AND stale fingerprints of this same
+            # call: a rewritten dataset's old frame must not outlive it
+            for k in [
+                k
+                for k in _FRAME_CACHE
+                if (k[:5] == key[:5] and k != key) or k[0].sparkContext._jsc is None
+            ]:
+                del _FRAME_CACHE[k]
+            return _FRAME_CACHE.setdefault(key, built)
+
+    return wrap

@@ -13,6 +13,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..forecast import ar_grid_forecast_fanout, ewma_vol_forecast, ssa_reconstruct
+from ..forecast.models import SEASONAL_PERIODS
 from ..sources.catalog import load_table
 from .queries import ORACLE, literal_grid, query, r6
 from .queries_stats import _S_SQL, _series
@@ -3952,7 +3953,7 @@ def _sarimax_replay(s: DataFrame, comp: DataFrame) -> DataFrame:
     wy = W.partitionBy("user_id").orderBy("t")
     pz = par.select("user_id", "sd", F.col("s_per").cast("long").alias("sl"))
     y_off = None
-    for sp in (7, 12, 24, 52):
+    for sp in SEASONAL_PERIODS:
         branch = F.lag("y", sp).over(wy)
         y_off = (
             F.when(F.col("sl") == sp, branch)
@@ -3984,13 +3985,12 @@ def _sarimax_replay(s: DataFrame, comp: DataFrame) -> DataFrame:
     # consecutive t; the inner join with el matches every t — e_long
     # covers exactly the modeling range), so row-distance == t-distance
     # and lag(z, s) IS z_{t−s}; the detected period is one of {7,12,24,
-    # 52}, so one window pass computes every candidate offset and the
-    # winner is selected per key by s_per after the par broadcast join.
-    # Values identical to the join form (same fetch, nulls coincide:
-    # both miss exactly when t−s precedes the frame), pinned by the
-    # Column-API reference test; the zs/es join exchanges (+ their
+    # 52} (SEASONAL_PERIODS), so one window pass computes every candidate
+    # offset and the winner is selected per key by s_per after the par
+    # broadcast join. Values identical to the join form (same fetch, nulls
+    # coincide: both miss exactly when t−s precedes the frame), pinned by
+    # the Column-API reference test; the zs/es join exchanges (+ their
     # sorts) are gone from the plan.
-    _SEAS_PERIODS = (7, 12, 24, 52)
     je = zd.join(el, ["user_id", "t"]).select(
         "user_id",
         "t",
@@ -4003,7 +4003,7 @@ def _sarimax_replay(s: DataFrame, comp: DataFrame) -> DataFrame:
         *[
             F.lag(col, sp + off).over(wt).alias(f"_{col}l{sp + off}")
             for col in ("z", "e")
-            for sp in _SEAS_PERIODS
+            for sp in SEASONAL_PERIODS
             for off in (0, 1, 2)
         ],
     )
@@ -4011,7 +4011,7 @@ def _sarimax_replay(s: DataFrame, comp: DataFrame) -> DataFrame:
 
     def _by_period(col: str, off: int):
         c = None
-        for sp in _SEAS_PERIODS:
+        for sp in SEASONAL_PERIODS:
             branch = F.col(f"_{col}l{sp + off}")
             c = (
                 F.when(F.col("s_per") == sp, branch)

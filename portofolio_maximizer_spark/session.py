@@ -9,7 +9,11 @@ Local testing runs on ``local[N]`` but every conf below is chosen for the
 - Arrow enabled for every pandas-UDF exchange;
 - shuffle partitions sized for the local core count — on a real cluster this
   is overridden (AQE coalescing makes over-partitioning cheap, so scale this
-  with cluster cores, not data size).
+  with cluster cores, not data size);
+- Python call-site capture off: with it on, every Column operator makes
+  about nine extra py4j round trips to record its ``file:line``, the bulk
+  of DAG-build traffic; errors keep their class and message and lose only
+  that Python ``file:line`` fragment.
 """
 
 from __future__ import annotations
@@ -53,6 +57,8 @@ def get_spark(
         # --- parquet: pushdown on (default, stated for clarity) ---
         .config("spark.sql.parquet.filterPushdown", "true")
         .config("spark.sql.parquet.aggregatePushdown", "true")
+        # --- DAG build: no per-Column-op call-site capture (see above) ---
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
     )

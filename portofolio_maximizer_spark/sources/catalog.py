@@ -19,6 +19,8 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..operators.memo import session_frame_cache
+
 TABLES = (
     "region",
     "nation",
@@ -36,8 +38,14 @@ TABLES = (
 BROADCAST_TABLES = frozenset({"region", "nation", "supplier", "part"})
 
 
+@session_frame_cache
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one testdata table as a DataFrame.
+
+    Resolved once per (session, sf_dir, table, data fingerprint): later
+    calls return the same frame, so the schema-inference job and the conf
+    writes run only on the first call; a rewritten parquet or a new
+    session reads again (``operators.memo.session_frame_cache``).
 
     ``events.ts`` has shipped under three different parquet encodings across
     testdata generations: TIMESTAMP(NANOS) (readable only as long under the

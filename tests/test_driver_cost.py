@@ -1,0 +1,153 @@
+"""Fixed per-query driver cost: py4j traffic of a Column op and
+per-session resolution of the source tables (``sources.catalog.load_table``)."""
+
+from __future__ import annotations
+
+import os
+import subprocess
+import sys
+
+import pandas as pd
+
+from portofolio_maximizer_spark.sources.catalog import load_table
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def _count_sends(spark, build) -> int:
+    client = spark.sparkContext._gateway._gateway_client
+    send = client.send_command
+    calls = []
+
+    def counting(*args, **kwargs):
+        calls.append(1)
+        return send(*args, **kwargs)
+
+    client.send_command = counting
+    try:
+        build()
+    finally:
+        client.send_command = send
+    return len(calls)
+
+
+def test_column_op_skips_call_site_capture(spark):
+    """With call-site capture on, ``col + lit`` sends ~27 commands; the
+    factory turns it off, leaving only the commands that build it."""
+    from pyspark.sql import functions as F
+
+    def build():
+        F.col("x") + F.lit(1)
+
+    build()  # first build resolves the py4j members it uses
+    assert _count_sends(spark, build) <= 8
+
+
+def _jobs_in_group(spark, group, action) -> int:
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _write_region(d, n: int) -> None:
+    pd.DataFrame(
+        {"r_regionkey": list(range(n)), "r_name": [f"R{i}" for i in range(n)]}
+    ).to_parquet(os.path.join(d, "region.parquet"), index=False)
+
+
+def test_second_load_launches_no_job(spark, tmp_path):
+    d = str(tmp_path)
+    _write_region(d, 3)
+    first = []
+    assert _jobs_in_group(spark, "load-1", lambda: first.append(load_table(spark, d, "region"))) > 0, (
+        "the first load should infer the schema with a Spark job"
+    )
+    again = []
+    assert _jobs_in_group(spark, "load-2", lambda: again.append(load_table(spark, d, "region"))) == 0
+    assert again[0] is first[0]
+
+
+def test_rewritten_parquet_is_read_again(spark, tmp_path):
+    d = str(tmp_path)
+    _write_region(d, 2)
+    assert load_table(spark, d, "region").count() == 2
+    _write_region(d, 5)
+    assert load_table(spark, d, "region").count() == 5
+
+
+def test_child_session_gets_its_own_frame(spark, tmp_path):
+    d = str(tmp_path)
+    _write_region(d, 2)
+    parent = load_table(spark, d, "region")
+    child = spark.newSession()
+    mine = load_table(child, d, "region")
+    assert mine is not parent
+    assert mine.sparkSession is child
+    assert load_table(child, d, "region") is mine
+
+
+def test_concurrent_loads_share_one_entry(spark, tmp_path):
+    """Background pools resolve tables from many threads at once: every
+    caller gets a usable frame and the memo keeps one entry per key."""
+    import threading
+
+    from portofolio_maximizer_spark.operators import memo
+
+    d = str(tmp_path)
+    _write_region(d, 4)
+    got = []
+    switch = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        threads = [
+            threading.Thread(target=lambda: got.append(load_table(spark, d, "region")))
+            for _ in range(12)
+        ]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=120)
+    finally:
+        sys.setswitchinterval(switch)
+    assert not any(t.is_alive() for t in threads)
+    assert len(got) == 12 and all(f.count() == 4 for f in got)
+    assert len([k for k in memo._FRAME_CACHE if k[0] is spark and k[3] == d]) == 1
+    kept = load_table(spark, d, "region")
+    assert any(f is kept for f in got)
+
+
+def test_new_application_reads_again(tmp_path):
+    """After the session stops, a new session resolves its own frame and the
+    stopped session's entry is pruned (a separate process: the test session
+    must stay up)."""
+    _write_region(str(tmp_path), 2)
+    script = f"""
+import sys
+sys.path.insert(0, {ROOT!r})
+from portofolio_maximizer_spark.operators import memo
+from portofolio_maximizer_spark.session import get_spark
+from portofolio_maximizer_spark.sources.catalog import load_table
+
+d = {str(tmp_path)!r}
+s1 = get_spark("memo-a", cpus=1)
+old = load_table(s1, d, "region")
+assert old.count() == 2
+s1.stop()
+s2 = get_spark("memo-b", cpus=1)
+new = load_table(s2, d, "region")
+assert new is not old and new.sparkSession is s2
+assert new.count() == 2
+assert [k[0] for k in memo._FRAME_CACHE] == [s2]
+s2.stop()
+print("ok")
+"""
+    env = dict(os.environ, SPARK_GRAFT_DRIVER_MEM="1g")
+    out = subprocess.run(
+        [sys.executable, "-c", script], capture_output=True, text=True, env=env, timeout=300
+    )
+    assert out.returncode == 0 and out.stdout.strip().endswith("ok"), out.stderr[-3000:]

@@ -292,6 +292,9 @@ def main() -> None:
     # background-pool failures, per pool and query ("Type: message"):
     # the timed owner re-raises, and BENCH_FULL.json keeps what the pool saw
     bg_errors: dict[str, dict[str, str]] = {"stage_prefetch": {}, "prebuild": {}}
+    # timed-query failures, per pass and query, in the same shape: the
+    # query's wall reads -1 and this keeps why
+    query_errors: dict[str, dict[str, str]] = {"cold": {}, "warm": {}}
 
     def kickoff_stage_prefetch() -> None:
         import threading
@@ -354,7 +357,7 @@ def main() -> None:
     )
     _pb_lookahead = 64
 
-    def run_pass() -> tuple[dict[str, float], float, dict, dict]:
+    def run_pass(pass_name: str) -> tuple[dict[str, float], float, dict, dict]:
         import threading
 
         t: dict[str, float] = {}
@@ -437,15 +440,16 @@ def main() -> None:
             try:
                 (df if df is not None else fn(spark, sf_dir)).count()
                 t[name] = round(time.time() - t0, 3)
-            except Exception:  # noqa: BLE001
+            except Exception as e:  # noqa: BLE001 — recorded in query_errors
                 t[name] = -1.0
+                query_errors[pass_name][name] = f"{type(e).__name__}: {e}"[:500]
         p0 = time.time()
         canary["end"] = probe()
         probe_wall += time.time() - p0
         # total excludes canary probe time: it remains the pack wall
         return t, round(time.time() - t_all - probe_wall, 3), canary, dict(pb_times)
 
-    timings, total, canary, prebuild_times = run_pass()
+    timings, total, canary, prebuild_times = run_pass("cold")
     # optional warm second pass (stage caches hot, codegen compiled):
     # SPARK_GRAFT_WARM_PASS=1 — off by default to keep the driver's
     # per-round bench single-pass
@@ -453,7 +457,7 @@ def main() -> None:
     warm_total = None
     warm_canary: dict | None = None
     if os.environ.get("SPARK_GRAFT_WARM_PASS"):
-        warm, warm_total, warm_canary, _ = run_pass()
+        warm, warm_total, warm_canary, _ = run_pass("warm")
 
     # The driver captures only the tail of stdout (~4000 chars) and parses
     # the JSON line from it. Keep the line compact: total + the 20 slowest
@@ -499,6 +503,7 @@ def main() -> None:
         # built again by its timed owner, so a real failure also reads -1
         # in queries
         "background_errors": {k: dict(sorted(v.items())) for k, v in bg_errors.items()},
+        "query_errors": {k: dict(sorted(v.items())) for k, v in query_errors.items()},
         "load_avg_start": list(load_start),
         "load_avg_end": list(os.getloadavg()),
         "canary": canary,

@@ -118,15 +118,22 @@ def render_oracle(sql: str, sf_dir: str) -> str:
     return sql.replace(STAGE_TOKEN, stage_root(sf_dir))
 
 
-def _stage_fresh(path: str, fp: dict) -> bool:
+def _read_marker(path: str) -> dict | None:
     import json
     import os
 
     try:
         with open(os.path.join(path, _MARKER)) as f:
-            return json.load(f) == fp
+            return json.load(f)
     except (OSError, ValueError):
-        return False
+        return None
+
+
+def _stage_fresh(path: str, fp: dict) -> bool:
+    """True when the artifact's marker carries this fingerprint (the
+    marker's other fields, such as the written schema, are not compared)."""
+    marker = _read_marker(path)
+    return isinstance(marker, dict) and all(marker.get(k) == v for k, v in fp.items())
 
 
 class _stage_lock:
@@ -198,8 +205,10 @@ def _ensure_staged(
                 writer = writer.partitionBy(partition_by)
             writer.parquet(path)
             STAGE_TIMES[ev_key] = round(_time.time() - _t0, 3)
+            # the written schema lets ``stage_cached`` read the artifact
+            # back without a schema-inference job
             with open(os.path.join(path, _MARKER), "w") as f:
-                json.dump(fp, f)
+                json.dump({**fp, "schema": df.schema.json()}, f)
         else:
             STAGE_EVENTS.setdefault(ev_key, "hit")
     return path
@@ -344,9 +353,16 @@ def stage_cached(spark: SparkSession, sf_dir: str, name: str, build) -> DataFram
     and return the READ-BACK DataFrame — the parquet scan both feeds the
     oracle and replaces the eager localCheckpoint in the query plan, so
     an expensive model fit runs once per (code version, dataset) across
-    processes instead of once per invocation."""
+    processes instead of once per invocation. The read takes the schema
+    recorded in the marker, so it launches no schema-inference job (Spark
+    makes a given file schema nullable, as inference does)."""
+    import json
+
+    from pyspark.sql.types import StructType
+
     path = _ensure_staged(build, name, sf_dir)
-    return spark.read.parquet(path + "/*.parquet")
+    schema = StructType.fromJson(json.loads(_read_marker(path)["schema"]))
+    return spark.read.schema(schema).parquet(path + "/*.parquet")
 
 
 # ---------------------------------------------------------------------------

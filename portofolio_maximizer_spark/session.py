@@ -13,7 +13,15 @@ Local testing runs on ``local[N]`` but every conf below is chosen for the
 - Python call-site capture off: with it on, every Column operator makes
   about nine extra py4j round trips to record its ``file:line``, the bulk
   of DAG-build traffic; errors keep their class and message and lose only
-  that Python ``file:line`` fragment.
+  that Python ``file:line`` fragment;
+- one Python worker pool per session: Spark keys its worker pools on the
+  workers' environment, and SQL-side Python (``applyInArrow``,
+  ``mapInArrow``, Python UDFs) adds ``SPARK_SIMPLIFIED_TRACEBACK=1`` that
+  RDD tasks do not, so with simplified tracebacks on, the first grouped
+  fit after any RDD Python job starts a second daemon and a second set of
+  workers. With them off, every Python path shares the warm workers; a
+  UDF error still raises ``PythonException`` with the original exception
+  class and message, and its traceback keeps PySpark's own worker frames.
 """
 
 from __future__ import annotations
@@ -59,6 +67,8 @@ def get_spark(
         .config("spark.sql.parquet.aggregatePushdown", "true")
         # --- DAG build: no per-Column-op call-site capture (see above) ---
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
+        # --- Python workers: one pool for RDD and SQL paths (see above) ---
+        .config("spark.sql.execution.pyspark.udf.simplifiedTraceback.enabled", "false")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
     )

@@ -1,5 +1,6 @@
-"""Fixed per-query driver cost: py4j traffic of a Column op and
-per-session resolution of the source tables (``sources.catalog.load_table``)."""
+"""Fixed per-query driver cost: py4j traffic of a Column op, per-session
+resolution of the source tables (``sources.catalog.load_table``) and the
+staged read-back (``plans.queries.stage_cached``)."""
 
 from __future__ import annotations
 
@@ -8,7 +9,9 @@ import subprocess
 import sys
 
 import pandas as pd
+import pytest
 
+from portofolio_maximizer_spark.plans import queries as Q
 from portofolio_maximizer_spark.sources.catalog import load_table
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -151,3 +154,69 @@ print("ok")
         [sys.executable, "-c", script], capture_output=True, text=True, env=env, timeout=300
     )
     assert out.returncode == 0 and out.stdout.strip().endswith("ok"), out.stderr[-3000:]
+
+
+def _staged_frame(spark):
+    return spark.sql(
+        """
+        SELECT CAST(id AS INT) AS k,
+               CAST(id * 1.25 AS DECIMAL(18, 6)) AS amount,
+               TIMESTAMP '2024-01-02 03:04:05' + make_interval(0, 0, 0, 0, CAST(id AS INT)) AS ts,
+               array(id, id + 1) AS xs,
+               map('a', CAST(id AS DOUBLE)) AS m,
+               named_struct('s', CAST(id AS STRING), 'd', DATE '2024-01-01') AS st
+        FROM range(4)
+        """
+    )
+
+
+@pytest.fixture
+def staged_sf(tmp_path, monkeypatch) -> str:
+    """An empty data dir whose stage root is private to the test."""
+    monkeypatch.setattr(Q, "ORACLE_STAGE", str(tmp_path / "stage"))
+    d = str(tmp_path / "sf")
+    os.makedirs(d)
+    return d
+
+
+def test_staged_read_back_keeps_inferred_schema(spark, staged_sf):
+    got = Q.stage_cached(spark, staged_sf, "typed", lambda: _staged_frame(spark))
+    path = os.path.join(Q.stage_root(staged_sf), "typed")
+    inferred = spark.read.parquet(path)
+    assert got.schema == inferred.schema
+    assert sorted(got.collect()) == sorted(inferred.collect())
+
+
+def test_staged_hit_launches_no_job(spark, staged_sf):
+    builds = []
+
+    def build():
+        builds.append(1)
+        return _staged_frame(spark)
+
+    Q.stage_cached(spark, staged_sf, "typed", build).count()
+    hit = []
+    assert _jobs_in_group(spark, "stage-hit", lambda: hit.append(Q.stage_cached(spark, staged_sf, "typed", build))) == 0
+    assert builds == [1]
+    assert hit[0].count() == 4
+
+
+def test_stale_stage_marker_rebuilds(spark, staged_sf):
+    import json
+
+    assert Q.stage_cached(spark, staged_sf, "grid", lambda: spark.range(3)).count() == 3
+    marker = os.path.join(Q.stage_root(staged_sf), "grid", Q._MARKER)
+    with open(marker) as f:
+        fp = json.load(f)
+    with open(marker, "w") as f:
+        json.dump({**fp, "pkg": "0" * 16}, f)
+    builds = []
+
+    def build():
+        builds.append(1)
+        return spark.range(5)
+
+    assert Q.stage_cached(spark, staged_sf, "grid", build).count() == 5
+    assert builds == [1]
+    with open(marker) as f:
+        assert json.load(f)["pkg"] == fp["pkg"]

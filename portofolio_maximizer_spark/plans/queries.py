@@ -355,7 +355,16 @@ def stage_cached(spark: SparkSession, sf_dir: str, name: str, build) -> DataFram
     an expensive model fit runs once per (code version, dataset) across
     processes instead of once per invocation. The read takes the schema
     recorded in the marker, so it launches no schema-inference job (Spark
-    makes a given file schema nullable, as inference does)."""
+    makes a given file schema nullable, as inference does).
+
+    One owner per artifact: the key is only (name, package hash, data
+    fingerprint), so two calls staging one name with their own builds
+    would let whichever query runs first decide what every consumer
+    reads. Each name is a string literal passed by exactly one call in
+    the package, inside its pack's builder (e.g. ``_ivf_index``), and
+    consumers call the builder; ``tests/test_stage_owners.py`` enforces
+    it for every staging call (this, ``stage_for_oracle`` and direct
+    ``_ensure_staged`` writes)."""
     import json
 
     from pyspark.sql.types import StructType

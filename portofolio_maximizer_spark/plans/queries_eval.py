@@ -365,6 +365,25 @@ def rank_preservation_fraction(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _wf_refit_params(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The staged per-(key, fold) walk-forward refits, metrics and betas
+    at full precision: the one builder of the ``wf_refit_params``
+    artifact. The refits run once per (code version, dataset) behind the
+    stage cache."""
+    from ..forecast import walkforward_refit
+    from .queries import stage_cached
+    from .queries_stats import _series
+
+    return stage_cached(
+        spark,
+        sf_dir,
+        "wf_refit_params",
+        lambda: walkforward_refit(
+            _series(spark, sf_dir).select("user_id", "rn", "value")
+        ),
+    )
+
+
 @query("walkforward_refit_eval")
 def walkforward_refit_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F8+F1 walk-forward with refit-per-fold: (key, fold) fan-out, AR
@@ -378,22 +397,9 @@ def walkforward_refit_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     the frozen-coefficient 1-step-ahead scoring over each fold via lag
     algebra, and re-derives both RMSEs and the skill — the per-fold OLS
     solve itself stays pinned by the AR-recovery property tests."""
-    from ..forecast import walkforward_refit
-    from .queries import stage_cached
-    from .queries_stats import _series
-
-    # per-fold refits run once per (code version, dataset) behind the
-    # stage cache; the full frame (metrics + betas) is staged, the query
-    # projects the metrics, the oracle reads the betas
-    out = stage_cached(
-        spark,
-        sf_dir,
-        "wf_refit_params",
-        lambda: walkforward_refit(
-            _series(spark, sf_dir).select("user_id", "rn", "value")
-        ),
-    )
-    return out.drop("beta0", "beta1", "beta2")
+    # the full frame (metrics + betas) is staged, the query projects the
+    # metrics, the oracle reads the betas
+    return _wf_refit_params(spark, sf_dir).drop("beta0", "beta1", "beta2")
 
 
 from .queries_stats import _S_SQL as _WF_S_SQL
@@ -1390,18 +1396,7 @@ def bayesian_order_prior(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Both engines read the SAME staged full-precision artifacts and
     aggregate independently — pure key-cardinality groupBys."""
-    from ..forecast import walkforward_refit
-    from .queries import stage_cached
-    from .queries_stats import _series
-
-    rec = stage_cached(
-        spark,
-        sf_dir,
-        "wf_refit_params",
-        lambda: walkforward_refit(
-            _series(spark, sf_dir).select("user_id", "rn", "value")
-        ),
-    )
+    rec = _wf_refit_params(spark, sf_dir)
     base = (
         rec.groupBy("user_id")
         .agg(

@@ -1767,32 +1767,12 @@ _RCV_SQL = f"""
 """
 
 
-@query(
-    "rolling_cv_aggregate",
-    oracle=f"""
-    WITH {_RCV_SQL}
-    SELECT user_id, model,
-           CAST(COUNT(*) AS BIGINT) AS fold_count,
-           CAST({_CV_HORIZON} AS INT) AS horizon,
-           ROUND(AVG(f_rmse), 6) AS mean_rmse,
-           ROUND(AVG(f_smape), 6) AS mean_smape,
-           ROUND(AVG(f_te), 6) AS mean_tracking_error,
-           ROUND(AVG(f_da), 6) AS mean_directional_accuracy,
-           ROUND(AVG(f_tda), 6) AS mean_terminal_da,
-           ROUND(AVG(CAST(n_obs AS DOUBLE)), 6) AS mean_n_observations
-    FROM fm2
-    GROUP BY user_id, model
-    """,
-)
-def rolling_cv_aggregate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """R146: the RollingWindowValidator with REAL per-fold kernel refits
-    — expanding-train fold grid, the staged `rolling_cv_forecasts`
-    kernel fan-out (HR-ARIMA grid / GARCH AR(1) mean path / SAMoSSA,
-    refit per (key, fold), `forecast/rollingcv.py`), the equal-weight
-    ensemble arm, per-fold regression-metric bundle per model,
-    cross-fold means per (key, model). The refits run once per
-    (code version, dataset) behind the stage cache; the metric bundle is
-    one fine-grained groupBy — linear."""
+def _rolling_cv_folds(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Every test bar of every complete rolling-CV fold with the staged
+    kernel forecasts for it: (user_id, fold_id, h1, bar, x, p_sarimax,
+    p_garch, p_samossa), h1 the 1-based step inside the fold. The one
+    builder of the ``rolling_cv_forecasts`` artifact (the per-(key,
+    fold) refits of ``forecast/rollingcv.py``)."""
     from ..forecast.rollingcv import rolling_cv_forecast_table
     from .queries import stage_cached
 
@@ -1839,26 +1819,51 @@ def rolling_cv_aggregate(spark: SparkSession, sf_dir: str) -> DataFrame:
             - _CV_MIN_TRAIN
             - _CV_HORIZON
             * F.floor((F.col("bar") - _CV_MIN_TRAIN) / _CV_HORIZON)
-        ).alias("h"),
+            + 1
+        ).alias("h1"),
     )
+    return te.join(
+        fcs.select(
+            "user_id", "fold_id", F.col("h").alias("h1"),
+            "p_sarimax", "p_garch", "p_samossa",
+        ),
+        ["user_id", "fold_id", "h1"],
+    )
+
+
+@query(
+    "rolling_cv_aggregate",
+    oracle=f"""
+    WITH {_RCV_SQL}
+    SELECT user_id, model,
+           CAST(COUNT(*) AS BIGINT) AS fold_count,
+           CAST({_CV_HORIZON} AS INT) AS horizon,
+           ROUND(AVG(f_rmse), 6) AS mean_rmse,
+           ROUND(AVG(f_smape), 6) AS mean_smape,
+           ROUND(AVG(f_te), 6) AS mean_tracking_error,
+           ROUND(AVG(f_da), 6) AS mean_directional_accuracy,
+           ROUND(AVG(f_tda), 6) AS mean_terminal_da,
+           ROUND(AVG(CAST(n_obs AS DOUBLE)), 6) AS mean_n_observations
+    FROM fm2
+    GROUP BY user_id, model
+    """,
+)
+def rolling_cv_aggregate(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """R146: the RollingWindowValidator with REAL per-fold kernel refits
+    — expanding-train fold grid, the staged `rolling_cv_forecasts`
+    kernel fan-out (HR-ARIMA grid / GARCH AR(1) mean path / SAMoSSA,
+    refit per (key, fold), `forecast/rollingcv.py`), the equal-weight
+    ensemble arm, per-fold regression-metric bundle per model,
+    cross-fold means per (key, model). The refits run once per
+    (code version, dataset) behind the stage cache; the metric bundle is
+    one fine-grained groupBy — linear."""
     models = literal_grid(
         spark,
         [("sarimax",), ("garch",), ("samossa",), ("ensemble",)],
         "model string",
     )
     pr = (
-        te.withColumn("h1", F.col("h") + 1)
-        .join(
-            fcs.select(
-                "user_id",
-                "fold_id",
-                F.col("h").alias("h1"),
-                "p_sarimax",
-                "p_garch",
-                "p_samossa",
-            ),
-            ["user_id", "fold_id", "h1"],
-        )
+        _rolling_cv_folds(spark, sf_dir)
         .crossJoin(F.broadcast(models))
         .select(
             "user_id",
@@ -2019,62 +2024,7 @@ def ensemble_weights_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     artifact is shared with R146."""
     from pyspark.sql import functions as F
 
-    from ..forecast.rollingcv import rolling_cv_forecast_table
-    from .queries import stage_cached
-
-    ev = load_table(spark, sf_dir, "events").filter(F.col("value") > 0)
-    wk = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    wp = Window.partitionBy("user_id")
-    s = ev.select(
-        "user_id",
-        F.col("value").alias("x"),
-        (F.row_number().over(wk) - 1).alias("bar"),
-    ).withColumn("n", F.count(F.lit(1)).over(wp))
-    fcs = stage_cached(
-        spark,
-        sf_dir,
-        "rolling_cv_forecasts",
-        lambda: rolling_cv_forecast_table(
-            ev.select(
-                "user_id",
-                (F.row_number().over(wk) - 1).alias("rn"),
-                "value",
-            ),
-            min_train=_CV_MIN_TRAIN,
-            horizon=_CV_HORIZON,
-        ),
-    )
-    fold_id = F.floor(
-        (F.col("bar") - _CV_MIN_TRAIN) / _CV_HORIZON
-    ).cast("int")
-    te = s.filter(
-        (F.col("bar") >= _CV_MIN_TRAIN)
-        & (
-            _CV_MIN_TRAIN
-            + _CV_HORIZON
-            * (F.floor((F.col("bar") - _CV_MIN_TRAIN) / _CV_HORIZON) + 1)
-            <= F.col("n")
-        )
-    ).select(
-        "user_id",
-        "bar",
-        "x",
-        fold_id.alias("fold_id"),
-        (
-            F.col("bar")
-            - _CV_MIN_TRAIN
-            - _CV_HORIZON
-            * F.floor((F.col("bar") - _CV_MIN_TRAIN) / _CV_HORIZON)
-            + 1
-        ).alias("h1"),
-    )
-    pr = te.join(
-        fcs.select(
-            "user_id", "fold_id", F.col("h").alias("h1"),
-            "p_sarimax", "p_garch", "p_samossa",
-        ),
-        ["user_id", "fold_id", "h1"],
-    ).select(
+    pr = _rolling_cv_folds(spark, sf_dir).select(
         "user_id", "fold_id", "x",
         "p_sarimax", "p_garch", "p_samossa",
         (

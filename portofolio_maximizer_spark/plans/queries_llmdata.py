@@ -990,6 +990,53 @@ def ngram_jaccard_neardups(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out
 
 
+def _ivf_index(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
+    """The staged IVF index as (centroids, assigned): the one builder of
+    the ``ivf_centroids`` and ``ivf_assigned`` artifacts, which every IVF
+    consumer reads. Both come from one ``ivf_build_index`` call, and the
+    lazy closure fits the index at most once when both artifacts miss."""
+    from .queries import stage_cached
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    built: dict = {}
+
+    def _index():
+        if not built:
+            built["a"], built["c"] = similarity.ivf_build_index(emb)
+        return built
+
+    cent = stage_cached(
+        spark, sf_dir, "ivf_centroids", lambda: _index()["c"]
+    )
+    assigned = stage_cached(
+        spark, sf_dir, "ivf_assigned", lambda: _index()["a"]
+    )
+    return cent, assigned
+
+
+def _pq_index(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
+    """The staged PQ index as (codebooks, codes): the one builder of the
+    ``pq_codebooks`` and ``pq_codes`` artifacts, fitted at most once by
+    one ``pq_build_index`` call, as in ``_ivf_index``."""
+    from .queries import stage_cached
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    built: dict = {}
+
+    def _index():
+        if not built:
+            built["codes"], built["books"] = similarity.pq_build_index(emb)
+        return built
+
+    books = stage_cached(
+        spark, sf_dir, "pq_codebooks", lambda: _index()["books"]
+    )
+    codes = stage_cached(
+        spark, sf_dir, "pq_codes", lambda: _index()["codes"]
+    )
+    return books, codes
+
+
 @query("embedding_ivf_ann")
 def embedding_ivf_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF ANN over the embeddings table: seeded KMeans coarse quantizer,
@@ -1008,22 +1055,8 @@ def embedding_ivf_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     version, dataset), probe many times. Repeat invocations skip both
     the KMeans fit and the assignment pass and read the staged index
     back."""
-    from .queries import stage_cached
-
     emb = load_table(spark, sf_dir, "embeddings")
-    built: dict = {}
-
-    def _index():
-        if not built:
-            built["a"], built["c"] = similarity.ivf_build_index(emb)
-        return built
-
-    cent = stage_cached(
-        spark, sf_dir, "ivf_centroids", lambda: _index()["c"]
-    )
-    assigned = stage_cached(
-        spark, sf_dir, "ivf_assigned", lambda: _index()["a"]
-    )
+    cent, assigned = _ivf_index(spark, sf_dir)
     out = similarity.ivf_probe(assigned, cent, emb.filter(F.col("vec_id") < 5), k=5)
     return out.select("qid", "vec_id", "ivf_list_id", r6("cosine").alias("cosine"), "rnk")
 
@@ -2089,26 +2122,12 @@ def ann_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     (stage-cache key), so the KMeans fit runs once per (code, dataset).
     The oracle replays assignment, probing and both top-5 sets
     independently from the staged centroids + raw embeddings."""
-    from .queries import stage_cached
-
     emb = load_table(spark, sf_dir, "embeddings")
     q = emb.filter(F.col("vec_id") < 20)
     exact = similarity.brute_force_topk(emb, q, k=5).select(
         "qid", F.col("vec_id").alias("evid")
     )
-    built: dict = {}
-
-    def _index():
-        if not built:
-            built["a"], built["c"] = similarity.ivf_build_index(emb)
-        return built
-
-    cent = stage_cached(
-        spark, sf_dir, "ivf_centroids", lambda: _index()["c"]
-    )
-    assigned = stage_cached(
-        spark, sf_dir, "ivf_assigned", lambda: _index()["a"]
-    )
+    cent, assigned = _ivf_index(spark, sf_dir)
     approx = similarity.ivf_probe(assigned, cent, q, k=5).select(
         "qid", F.col("vec_id").alias("avid")
     )
@@ -2276,26 +2295,12 @@ def ivf_nprobe_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     stage-cache key — the fit runs once per dataset); the oracle replays
     assignment, the full 16-list probe ranking, candidate scoring, and
     every nprobe's top-5 independently from the raw embeddings."""
-    from .queries import stage_cached
-
     emb = load_table(spark, sf_dir, "embeddings")
     q = emb.filter(F.col("vec_id") < 20)
     exact = similarity.brute_force_topk(emb, q, k=5).select(
         "qid", F.col("vec_id").alias("evid")
     )
-    built: dict = {}
-
-    def _index():
-        if not built:
-            built["a"], built["c"] = similarity.ivf_build_index(emb)
-        return built
-
-    cent = stage_cached(
-        spark, sf_dir, "ivf_centroids", lambda: _index()["c"]
-    )
-    assigned = stage_cached(
-        spark, sf_dir, "ivf_assigned", lambda: _index()["a"]
-    )
+    cent, assigned = _ivf_index(spark, sf_dir)
     qe = q.select(
         F.col("vec_id").alias("qid"),
         similarity.as_double(F.col("embedding")).alias("qe"),
@@ -3340,22 +3345,7 @@ def cluster_silhouette_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     self-join, no Python. The oracle re-derives the assignment from the
     staged centroids independently (same differential discipline as
     `embedding_ivf_ann`)."""
-    from .queries import stage_cached
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    built: dict = {}
-
-    def _index():
-        if not built:
-            built["a"], built["c"] = similarity.ivf_build_index(emb)
-        return built
-
-    cent = stage_cached(
-        spark, sf_dir, "ivf_centroids", lambda: _index()["c"]
-    )
-    assigned = stage_cached(
-        spark, sf_dir, "ivf_assigned", lambda: _index()["a"]
-    )
+    cent, assigned = _ivf_index(spark, sf_dir)
     d2 = F.aggregate(
         F.zip_with(F.col("de"), F.col("centroid_vec"), lambda x, y: (x - y) * (x - y)),
         F.lit(0.0),
@@ -3900,22 +3890,8 @@ def embedding_pq_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     compressed index carries 4 small ints per vector; search never
     shuffles the corpus — the same build-once/probe-many staging shape
     as the IVF index."""
-    from .queries import stage_cached
-
     emb = load_table(spark, sf_dir, "embeddings")
-    built: dict = {}
-
-    def _index():
-        if not built:
-            built["codes"], built["books"] = similarity.pq_build_index(emb)
-        return built
-
-    books = stage_cached(
-        spark, sf_dir, "pq_codebooks", lambda: _index()["books"]
-    )
-    codes = stage_cached(
-        spark, sf_dir, "pq_codes", lambda: _index()["codes"]
-    )
+    books, codes = _pq_index(spark, sf_dir)
     out = similarity.pq_rerank_topk(
         codes, books, emb, emb.filter(F.col("vec_id") < 5),
         k=5, shortlist=128,
@@ -4023,36 +3999,9 @@ def embedding_ivfadc_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scan-cost-vs-recall evidence lives in `ivfadc_scan_frontier`
     (the L63-style row comparing IVF-exact against IVFADC)."""
-    from .queries import stage_cached
-
     emb = load_table(spark, sf_dir, "embeddings")
-    ivf_built: dict = {}
-    pq_built: dict = {}
-
-    def _ivf():
-        if not ivf_built:
-            ivf_built["a"], ivf_built["c"] = similarity.ivf_build_index(emb)
-        return ivf_built
-
-    def _pq():
-        if not pq_built:
-            pq_built["codes"], pq_built["books"] = similarity.pq_build_index(
-                emb
-            )
-        return pq_built
-
-    cent = stage_cached(
-        spark, sf_dir, "ivf_centroids", lambda: _ivf()["c"]
-    )
-    assigned = stage_cached(
-        spark, sf_dir, "ivf_assigned", lambda: _ivf()["a"]
-    )
-    books = stage_cached(
-        spark, sf_dir, "pq_codebooks", lambda: _pq()["books"]
-    )
-    codes = stage_cached(
-        spark, sf_dir, "pq_codes", lambda: _pq()["codes"]
-    )
+    cent, assigned = _ivf_index(spark, sf_dir)
+    books, codes = _pq_index(spark, sf_dir)
     out = similarity.ivfadc_topk(
         assigned,
         cent,
@@ -4212,38 +4161,12 @@ def ivfadc_scan_frontier(spark: SparkSession, sf_dir: str) -> DataFrame:
     Oracle: the composed staged-index replay (assignment, probes,
     encoding, ADC, shortlist, rerank) plus the brute-force truth —
     every column integer or a 6dp ratio of integers."""
-    from .queries import stage_cached
     from ..llmdata.similarity import _sq_dist, as_double
 
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 5)
-    ivf_built: dict = {}
-    pq_built: dict = {}
-
-    def _ivf():
-        if not ivf_built:
-            ivf_built["a"], ivf_built["c"] = similarity.ivf_build_index(emb)
-        return ivf_built
-
-    def _pq():
-        if not pq_built:
-            pq_built["codes"], pq_built["books"] = similarity.pq_build_index(
-                emb
-            )
-        return pq_built
-
-    cent = stage_cached(
-        spark, sf_dir, "ivf_centroids", lambda: _ivf()["c"]
-    )
-    assigned = stage_cached(
-        spark, sf_dir, "ivf_assigned", lambda: _ivf()["a"]
-    )
-    books = stage_cached(
-        spark, sf_dir, "pq_codebooks", lambda: _pq()["books"]
-    )
-    codes = stage_cached(
-        spark, sf_dir, "pq_codes", lambda: _pq()["codes"]
-    )
+    cent, assigned = _ivf_index(spark, sf_dir)
+    books, codes = _pq_index(spark, sf_dir)
     q = queries.select(
         F.col("vec_id").alias("qid"), as_double(F.col("embedding")).alias("qe")
     )
@@ -5909,22 +5832,7 @@ def ivf_index_quality_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     and assignment run once per dataset), one nlist-bounded aggregate.
     Staged-verification oracle: re-derives assignment and every
     distance from the raw embeddings + staged centroids."""
-    from .queries import stage_cached
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    built: dict = {}
-
-    def _index():
-        if not built:
-            built["a"], built["c"] = similarity.ivf_build_index(emb)
-        return built
-
-    cent = stage_cached(
-        spark, sf_dir, "ivf_centroids", lambda: _index()["c"]
-    )
-    assigned = stage_cached(
-        spark, sf_dir, "ivf_assigned", lambda: _index()["a"]
-    )
+    cent, assigned = _ivf_index(spark, sf_dir)
     d2 = (
         assigned.join(F.broadcast(cent), "ivf_list_id")
         .select(
@@ -6099,22 +6007,8 @@ def pq_distortion_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     census is (n_blocks)-bounded. Staged-verification oracle: re-derives
     the per-block argmin assignment and every squared error from raw
     embeddings + staged codebooks, exactly the L45 replay."""
-    from .queries import stage_cached
-
     emb = load_table(spark, sf_dir, "embeddings")
-    built: dict = {}
-
-    def _index():
-        if not built:
-            built["codes"], built["books"] = similarity.pq_build_index(emb)
-        return built
-
-    books = stage_cached(
-        spark, sf_dir, "pq_codebooks", lambda: _index()["books"]
-    )
-    codes = stage_cached(
-        spark, sf_dir, "pq_codes", lambda: _index()["codes"]
-    )
+    books, codes = _pq_index(spark, sf_dir)
     sub_dim = 16
     # block fan-out as a GENERATOR (explode of a 4-literal array), not a
     # crossJoin — same rows, no join node for the audit to adjudicate

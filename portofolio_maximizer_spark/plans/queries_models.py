@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 
 from ..forecast import ar_grid_forecast_fanout, ewma_vol_forecast, ssa_reconstruct
 from ..forecast.models import SEASONAL_PERIODS
+from ..operators import memo
 from ..sources.catalog import load_table
 from .queries import ORACLE, literal_grid, query, r6
 from .queries_stats import _S_SQL, _series
@@ -678,6 +679,23 @@ ORACLE["sarimax_hr_forecast"] = f"""
     """
 
 
+def _garch_grid_params(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The staged GARCH grid-fit frame at full precision: the one builder
+    of the ``garch_grid_params`` artifact, fitted once per (code version,
+    dataset) via the stage cache."""
+    from ..forecast import garch_grid_fit
+    from .queries import stage_cached
+
+    return stage_cached(
+        spark,
+        sf_dir,
+        "garch_grid_params",
+        lambda: garch_grid_fit(
+            _series(spark, sf_dir).select("user_id", "rn", "lr"), round_out=False
+        ),
+    )
+
+
 @query("garch_grid_fit")
 def garch_grid_fit_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F2 full: GARCH(p,q) order grid (p,q ∈ {1,2}) + the reference's
@@ -700,20 +718,9 @@ def garch_grid_fit_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     ENTIRE Student-t nu ladder AND the Hansen skew-t (nu, λ) ladder
     (lgamma closed form, signed residuals), the three-way AIC decision,
     the 1-step vol forecast and the IGARCH guard."""
-    from ..forecast import garch_grid_fit
-    from .queries import stage_cached
-
-    # full-precision frame staged whole: the oracle reads the named
-    # coefficient columns, the query projects/rounds the rest — one fit
-    # per (code version, dataset) via the stage cache
-    raw = stage_cached(
-        spark,
-        sf_dir,
-        "garch_grid_params",
-        lambda: garch_grid_fit(
-            _series(spark, sf_dir).select("user_id", "rn", "lr"), round_out=False
-        ),
-    )
+    # the oracle reads the named coefficient columns, the query
+    # projects/rounds the rest
+    raw = _garch_grid_params(spark, sf_dir)
     r6_ = lambda c: F.round(c, 6)  # noqa: E731
     return raw.select(
         "user_id",
@@ -1485,28 +1492,19 @@ ORACLE["embedding_classifier_eval"] = """
 """
 
 
-# The applyInPandas simulation is the most expensive kernel in the pack and
-# several queries consume its output (trades, summary, portfolio, promotion
-# gate, integrity audit). It is staged once per (code version, dataset) via
-# stage_cached; this dict just memoizes the read-back frame per session.
-_TRADES_CACHE: dict[tuple[int, str], DataFrame] = {}
-
-
+@memo.session_frame_cache
 def _simulated_trades(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The full trades frame is staged as ``paper_trades`` via
     ``stage_cached``: the stateful simulation runs once per (code
     version, dataset) across processes, the read-back parquet scan is
     what every consumer (summary, portfolio ledger, promotion gate,
     integrity audit) plans against, and the same staged rows feed their
-    oracles."""
-    key = (id(spark), sf_dir)
-    if key not in _TRADES_CACHE:
-        from .queries import stage_cached
+    oracles. The read-back frame is memoized per session."""
+    from .queries import stage_cached
 
-        _TRADES_CACHE[key] = stage_cached(
-            spark, sf_dir, "paper_trades", lambda: _build_trades(spark, sf_dir)
-        )
-    return _TRADES_CACHE[key]
+    return stage_cached(
+        spark, sf_dir, "paper_trades", lambda: _build_trades(spark, sf_dir)
+    )
 
 
 def _build_trades(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4689,17 +4687,7 @@ def garch_price_forecast_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     only the vol ladder comes from the staged artifact. The oracle
     repeats the whole derivation independently through the shared
     innovation CTE chain. Key-cardinality joins after one window pass."""
-    from .queries import stage_cached
-    from ..forecast import garch_grid_fit
-
-    staged = stage_cached(
-        spark,
-        sf_dir,
-        "garch_grid_params",
-        lambda: garch_grid_fit(
-            _series(spark, sf_dir).select("user_id", "rn", "lr"), round_out=False
-        ),
-    )
+    staged = _garch_grid_params(spark, sf_dir)
     par = staged.select(
         "user_id",
         "dd",

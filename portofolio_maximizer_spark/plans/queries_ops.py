@@ -3291,10 +3291,12 @@ def classifier_readiness_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     `:146-156`) and the READY / APPROACHING / NOT_READY verdict with
     the days-to-ready estimate (`:158-171`).
 
-    Scale: the dataset frame is the pipeline pack's one-window-pass +
-    forward self-join; readiness is two global folds joined as
+    Scale: the dataset frame is the pipeline pack's one window pass
+    with its forward value; readiness is two global folds joined as
     broadcast scalars."""
     from pyspark.sql import Window
+
+    from .queries_pipeline import forward_value
 
     ev = load_table(spark, sf_dir, "events").filter(F.col("value") > 0)
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
@@ -3310,20 +3312,10 @@ def classifier_readiness_check(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.log(F.col("value") / F.lag("value", 1).over(w)).alias("lr"),
         F.avg("value").over(w.rowsBetween(-4, 0)).alias("f_ma5"),
         F.stddev_samp("value").over(w.rowsBetween(-9, 0)).alias("f_vol10"),
+        forward_value("value", (k % 5) + 1, w).alias("forward_close"),
     )
-    sig = s.filter(
+    lab = s.filter(
         (F.col("event_type") == "click") & F.col("k").isNotNull()
-    )
-    fwd = s.select(
-        F.col("user_id").alias("f_user"),
-        F.col("rn").alias("f_rn"),
-        F.col("value").alias("forward_close"),
-    )
-    lab = sig.join(
-        fwd,
-        (F.col("f_user") == F.col("user_id"))
-        & (F.col("f_rn") == F.col("rn") + (F.col("k") % 5) + 1),
-        "left",
     )
     prod = (F.col("user_id") % 10 != 0) & F.col("lr").isNotNull()
     has_fwd = F.col("forward_close").isNotNull()

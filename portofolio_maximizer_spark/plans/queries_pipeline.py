@@ -16,7 +16,7 @@ window.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window, WindowSpec
 from pyspark.sql import functions as F
 
 from ..llmdata import dedup, textstats
@@ -725,6 +725,27 @@ _DTD_COLD_START_N = 50
 _DTD_MIN_CLASS = 10
 
 
+#: ``k % 5 + 1`` keeps the sign of ``k`` (Spark's ``%`` truncates toward
+#: zero), so a signal's horizon may be any offset in [-3, 5]
+_FORWARD_OFFSETS = range(-3, 6)
+
+
+def forward_value(col: str, offset: Column, w: WindowSpec) -> Column:
+    """``col`` of the row ``offset`` rows after the current one in window
+    ``w``: NULL past either end of the partition or for an offset outside
+    ``_FORWARD_OFFSETS``, the row itself at 0, earlier rows when negative.
+    It is what a left self-join on (key, rn + offset) returns with ``rn``
+    the ``row_number`` over ``w``, read as one CASE over ``lead``/``lag``
+    in the window pass the rows already have, so no exchange pair."""
+    out = F.when(offset == 0, F.col(col))
+    for h in _FORWARD_OFFSETS:
+        if h > 0:
+            out = out.when(offset == h, F.lead(col, h).over(w))
+        elif h < 0:
+            out = out.when(offset == h, F.lag(col, -h).over(w))
+    return out
+
+
 @query(
     "directional_training_dataset",
     oracle="""
@@ -786,8 +807,8 @@ def directional_training_dataset(spark: SparkSession, sf_dir: str) -> DataFrame:
     path, `:180-190`); unlabelable signals are dropped. Features carry
     the 5-bar mean and 10-bar vol at entry.
 
-    Scale: one window pass + a self equi-join on (key, rn + horizon) —
-    co-partitioned, shuffle on the key only. No UDF."""
+    Scale: one window pass that also reads the forward close
+    (``forward_value``) — shuffle on the key only. No UDF."""
     ev = load_table(spark, sf_dir, "events").filter(F.col("value") > 0)
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     k = F.get_json_object("props", "$.k").cast("int")
@@ -802,20 +823,11 @@ def directional_training_dataset(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.log(F.col("value") / F.lag("value", 1).over(w)).alias("lr"),
         F.avg("value").over(w.rowsBetween(-4, 0)).alias("f_ma5"),
         F.stddev_samp("value").over(w.rowsBetween(-9, 0)).alias("f_vol10"),
+        forward_value("value", (k % 5) + 1, w).alias("forward_close"),
     )
-    sig = s.filter((F.col("event_type") == "click") & F.col("k").isNotNull())
-    fwd = s.select(
-        F.col("user_id").alias("f_user"),
-        F.col("rn").alias("f_rn"),
-        F.col("value").alias("forward_close"),
-    )
-    g = sig.withColumn("horizon", (F.col("k") % 5) + 1)
-    lab = g.join(
-        fwd,
-        (F.col("f_user") == F.col("user_id"))
-        & (F.col("f_rn") == F.col("rn") + F.col("horizon")),
-        "left",
-    )
+    lab = s.filter(
+        (F.col("event_type") == "click") & F.col("k").isNotNull()
+    ).withColumn("horizon", (F.col("k") % 5) + 1)
     prod = (F.col("user_id") % 10 != 0) & F.col("lr").isNotNull()
     has_fwd = F.col("forward_close").isNotNull()
     return lab.filter(has_fwd | prod).select(
@@ -1205,7 +1217,7 @@ def family_calibration_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     gate (cycles / regime-diversity / span minimums) whose reason codes
     ride on every row.
 
-    Scale: one window pass, a co-partitioned forward self-join, two
+    Scale: one window pass (with the forward value), two
     bounded family groupBys, a broadcast gate scalar. No UDF."""
     from ..functions.scalars import hash_unit_interval
 
@@ -1224,6 +1236,7 @@ def family_calibration_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.avg("value").over(w.rowsBetween(-4, 0)).alias("ma5"),
         F.stddev_samp("value").over(w.rowsBetween(-9, 0)).alias("sd10"),
         hash_unit_interval(F.lit("ev"), F.col("event_id")).alias("u"),
+        forward_value("value", (k % 5) + 1, w).alias("f_value"),
     )
     sig = s.filter(
         (F.col("event_type") == "click") & F.col("k").isNotNull()
@@ -1242,29 +1255,16 @@ def family_calibration_report(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("sd10") > 0, F.abs(F.col("value") - F.col("ma5")) / F.col("sd10")
         ).alias("snr"),
     )
-    fwd = s.select(
-        F.col("user_id").alias("f_user"),
-        F.col("rn").alias("f_rn"),
-        F.col("value").alias("f_value"),
-    )
-    sig2 = (
-        sig.join(
-            fwd,
-            (F.col("f_user") == F.col("user_id"))
-            & (F.col("f_rn") == F.col("rn") + (F.col("k") % 5) + 1),
-            "left",
-        )
-        .select(
-            "*",
-            (F.coalesce(F.col("snr"), F.lit(0.0)) < _FCW_SNR_BLOCK).alias(
-                "blocked_by_snr"
-            ),
-            (F.col("u") < 0.1).alias("blocked_by_evidence"),
-            F.when(
-                F.col("f_value").isNotNull() & (F.col("value") > 0),
-                (F.col("f_value") - F.col("value")) / F.col("value"),
-            ).alias("fwd_ret"),
-        )
+    sig2 = sig.select(
+        "*",
+        (F.coalesce(F.col("snr"), F.lit(0.0)) < _FCW_SNR_BLOCK).alias(
+            "blocked_by_snr"
+        ),
+        (F.col("u") < 0.1).alias("blocked_by_evidence"),
+        F.when(
+            F.col("f_value").isNotNull() & (F.col("value") > 0),
+            (F.col("f_value") - F.col("value")) / F.col("value"),
+        ).alias("fwd_ret"),
     )
     outc = (
         s.filter(F.col("event_type") == "purchase")

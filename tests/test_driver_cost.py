@@ -1,5 +1,6 @@
 """Fixed per-query driver cost: py4j traffic of a Column op, per-session
-resolution of the source tables (``sources.catalog.load_table``) and the
+resolution of the source tables (``sources.catalog.load_table``) and of
+the staged trades (``plans.queries_models._simulated_trades``), and the
 staged read-back (``plans.queries.stage_cached``)."""
 
 from __future__ import annotations
@@ -63,16 +64,30 @@ def _write_region(d, n: int) -> None:
     ).to_parquet(os.path.join(d, "region.parquet"), index=False)
 
 
-def test_second_load_launches_no_job(spark, tmp_path):
+@pytest.fixture
+def per_session(tmp_path, sf_dir):
+    """The per-session frame sources, by name: ``load_table`` over a fresh
+    parquet file (its first read infers the schema with a job), and the
+    staged ``paper_trades`` read-back of ``_simulated_trades``."""
+    from portofolio_maximizer_spark.plans.queries_models import _simulated_trades
+
     d = str(tmp_path)
     _write_region(d, 3)
-    first = []
-    assert _jobs_in_group(spark, "load-1", lambda: first.append(load_table(spark, d, "region"))) > 0, (
-        "the first load should infer the schema with a Spark job"
-    )
-    again = []
-    assert _jobs_in_group(spark, "load-2", lambda: again.append(load_table(spark, d, "region"))) == 0
-    assert again[0] is first[0]
+    return {
+        "region": lambda session: load_table(session, d, "region"),
+        "paper_trades": lambda session: _simulated_trades(session, sf_dir),
+    }
+
+
+def test_second_load_launches_no_job(spark, per_session):
+    for name, load in per_session.items():
+        first = []
+        jobs = _jobs_in_group(spark, f"{name}-1", lambda: first.append(load(spark)))
+        if name == "region":
+            assert jobs > 0, "the first load should infer the schema with a Spark job"
+        again = []
+        assert _jobs_in_group(spark, f"{name}-2", lambda: again.append(load(spark))) == 0, name
+        assert again[0] is first[0], name
 
 
 def test_rewritten_parquet_is_read_again(spark, tmp_path):
@@ -83,15 +98,14 @@ def test_rewritten_parquet_is_read_again(spark, tmp_path):
     assert load_table(spark, d, "region").count() == 5
 
 
-def test_child_session_gets_its_own_frame(spark, tmp_path):
-    d = str(tmp_path)
-    _write_region(d, 2)
-    parent = load_table(spark, d, "region")
+def test_child_session_gets_its_own_frame(spark, per_session):
     child = spark.newSession()
-    mine = load_table(child, d, "region")
-    assert mine is not parent
-    assert mine.sparkSession is child
-    assert load_table(child, d, "region") is mine
+    for name, load in per_session.items():
+        parent = load(spark)
+        mine = load(child)
+        assert mine is not parent, name
+        assert mine.sparkSession is child, name
+        assert load(child) is mine, name
 
 
 def test_concurrent_loads_share_one_entry(spark, tmp_path):

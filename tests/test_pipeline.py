@@ -15,6 +15,7 @@ from portofolio_maximizer_spark.operators.windows import (
     scalable_running_sum,
 )
 from portofolio_maximizer_spark.plans.queries_pipeline import (
+    forward_value,
     quality_filter_funnel,
     sequence_packing_stats,
 )
@@ -310,3 +311,51 @@ def test_closed_form_ntile_matches_spark_ntile(spark):
         g = {r.rk: r.tile for r in got.collect()}
         w = {r.rk: r.tile for r in want.collect()}
         assert g == w, (total, n)
+
+
+def test_forward_value_matches_offset_self_join(spark):
+    """``forward_value`` equals the left self-join on (key, rn + k % 5 + 1)
+    it replaced, including negative ``k``: Spark's ``%`` keeps the
+    dividend's sign, so the offset spans [-3, 5] and reads backward rows,
+    the row itself at 0, and NULL past either end."""
+    df = spark.range(0, 240).select(
+        (F.col("id") % 3).alias("user_id"),
+        F.col("id").alias("ts"),
+        (F.col("id") * 1.5 + 1).alias("value"),
+        F.when(F.col("id") % 11 == 0, F.lit(None))
+        .otherwise((F.col("id") * 7) % 41 - 20)
+        .cast("int")
+        .alias("k"),
+    )
+    w = Window.partitionBy("user_id").orderBy("ts")
+    offset = (F.col("k") % 5) + 1
+    s = df.select(
+        "user_id",
+        "value",
+        "k",
+        offset.alias("offset"),
+        F.row_number().over(w).alias("rn"),
+        forward_value("value", offset, w).alias("got"),
+    )
+    fwd = s.select(
+        F.col("user_id").alias("f_user"),
+        F.col("rn").alias("f_rn"),
+        F.col("value").alias("want"),
+    )
+    joined = s.join(
+        fwd,
+        (F.col("f_user") == F.col("user_id"))
+        & (F.col("f_rn") == F.col("rn") + F.col("offset")),
+        "left",
+    ).cache()
+    try:
+        assert joined.count() == 240
+        assert joined.filter(~F.col("got").eqNullSafe(F.col("want"))).count() == 0
+        offsets = {r[0] for r in joined.select("offset").distinct().collect()}
+        assert offsets == set(range(-3, 6)) | {None}
+        # backward reads, the row itself, and both partition ends occur
+        assert joined.filter((F.col("offset") < 0) & F.col("want").isNotNull()).count() > 0
+        assert joined.filter((F.col("offset") == 0) & (F.col("got") == F.col("value"))).count() > 0
+        assert joined.filter(F.col("k").isNotNull() & F.col("want").isNull()).count() > 0
+    finally:
+        joined.unpersist()

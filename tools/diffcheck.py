@@ -7,6 +7,12 @@ ints/strings, 1e-6-tolerant for floats — both sides already round to 6).
 
 Usage:  python tools/diffcheck.py [--strict] [sf_dir] [query ...]
 
+The last line reads ``passed/checked checked, N skipped``: ``checked``
+counts the queries compared against their oracle, ``N`` the registered
+queries left out (not named on the command line, or without an oracle),
+listed by name when there are at most 10. An unknown query name is an
+error.
+
 ``--strict`` mirrors the driver's dtype-sensitive exact value hash: a
 DuckDB HUGEINT (materialized float64, ``216.0``) vs a Spark BIGINT
 (``216``) is a FAIL even when numerically equal, and float columns must
@@ -104,15 +110,20 @@ def main() -> int:
     from portofolio_maximizer_spark.plans.queries import ORACLE, render_oracle
     from portofolio_maximizer_spark.session import get_spark
 
-    spark = get_spark("diffcheck")
     qs = entrymod.queries()
+    unknown = sorted(only - set(qs))
+    if unknown:
+        print(f"unknown queries: {', '.join(unknown)}")
+        return 1
+    spark = get_spark("diffcheck")
     # render the staged-oracle path templates for THIS sf_dir (the driver
     # contract's oracle_sql() renders for its fixed sf0.01 run)
     oracles = {k: render_oracle(v, sf_dir) for k, v in ORACLE.items()}
     con = duck_connection(sf_dir)
-    failed = []
+    failed, skipped = [], []
     for name, fn in qs.items():
         if only and name not in only:
+            skipped.append(name)
             continue
         t0 = time.time()
         try:
@@ -123,6 +134,7 @@ def main() -> int:
             continue
         if name not in oracles:
             print(f"ROWS  {name}: {len(sdf)} rows (no oracle) [{time.time()-t0:.1f}s]")
+            skipped.append(name)
             continue
         try:
             ddf = con.sql(oracles[name]).df()
@@ -137,7 +149,9 @@ def main() -> int:
             print(f"      - {msg}")
         if issues:
             failed.append(name)
-    print(f"\n{len(qs) - len(failed)}/{len(qs)} queries match")
+    checked = len(qs) - len(skipped)
+    names = f": {', '.join(skipped)}" if 0 < len(skipped) <= 10 else ""
+    print(f"\n{checked - len(failed)}/{checked} checked, {len(skipped)} skipped{names}")
     return 1 if failed else 0
 
 

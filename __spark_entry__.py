@@ -53,7 +53,14 @@ def _interleave(qs: dict[str, Callable]) -> dict[str, Callable]:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """One entry per implemented operator from SURVEY.md §2."""
+    """One entry per implemented operator from SURVEY.md §2.
+
+    Reading a source table (``sources.catalog.load_table``) turns
+    simplified Python UDF tracebacks off on the caller's session, so RDD
+    Python tasks and the Arrow grouped fits share one worker pool instead
+    of two. The trade-off: a failing UDF still raises ``PythonException``
+    with its original exception class and message, but its traceback
+    also lists PySpark's own worker frames."""
     return _interleave(dict(QUERIES))
 
 

@@ -4,7 +4,9 @@ JSON line: {"metric": ..., "value": N, "unit": "sec", "queries": {...}, "sf": ..
 
 Each query is forced with a cheap count() action (no driver-side collect of
 result data beyond the aggregate). A warmup run of the flagship query
-amortizes JVM/codegen startup out of the per-query numbers.
+amortizes JVM/codegen startup out of the per-query numbers. Beside the
+load averages, each pass records its hypervisor steal share (``/proc/stat``),
+so a run slowed by a neighbour on a shared host reads as such.
 """
 
 from __future__ import annotations
@@ -18,6 +20,25 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 import __spark_entry__ as entrymod
 from portofolio_maximizer_spark.session import get_spark
+
+
+def cpu_times() -> list[int]:
+    """This machine's aggregate CPU times from ``/proc/stat``, in ticks."""
+    with open("/proc/stat") as f:
+        return [int(v) for v in f.readline().split()[1:]]
+
+
+def stolen_share(start: list[int], end: list[int]) -> float:
+    """Share of the busy CPU time between two ``cpu_times`` readings that
+    the hypervisor gave to other guests (steal): time the pass's threads
+    were ready to run and could not. Copied from ``perfbench/run.py``,
+    which imports its siblings as top-level modules and so cannot be
+    imported from here."""
+    user, nice, system, _idle, _iowait, irq, softirq, steal = (
+        b - a for a, b in zip(start[:8], end[:8])
+    )
+    busy = user + nice + system + irq + softirq + steal
+    return steal / busy if busy else 0.0
 
 
 def main() -> None:
@@ -50,121 +71,6 @@ def main() -> None:
     queries = entrymod.queries()
     # warmup: flagship query once to pay JVM/codegen startup
     queries["q1_pricing_summary"](spark, sf_dir).count()
-
-    # Host-capacity canary (round-9 verdict, Next round #1): a fixed
-    # 3-query probe timed at pack start / middle / end. If the host
-    # slows under co-tenant load mid-run, the SAME queries get slower at
-    # the later checkpoints, and the wall delta decomposes mechanically
-    # into ambient drift vs real regression — no prose needed. Probes
-    # are warmed once below so they measure host capacity, not codegen.
-    canary_names = (
-        "q1_pricing_summary",
-        "user_return_metrics",
-        "rolling_quantile_tail",
-    )
-    # Pinned QUIET-BOX baseline for the canary probes (round-11
-    # directive #6): the intra-run drift factor compares later probes
-    # to the START probe, so a run whose start landed on a loaded box
-    # reads mid-run recovery as sub-1.0 "drift" (the r11 driver
-    # artifact: drift 0.9224 while load1 read 5.5). Ratios against this
-    # ABSOLUTE baseline make that case auditable from the JSON alone:
-    # probe/baseline >> 1 at the start says "the box was loaded from
-    # the first probe", independent of how the run evolved. Baseline is
-    # sf0.1-specific; ratios are emitted only at that SF.
-    canary_baseline = {
-        "q1_pricing_summary": 0.412,
-        "user_return_metrics": 0.884,
-        "rolling_quantile_tail": 0.454,
-    }
-    canary_baseline_provenance = {
-        "sf_dir": "/root/testdata/sf0.1",
-        "method": "median of 7 warmed repetitions per probe",
-        "box": "build sandbox local[32], load1 1.14 at measurement",
-        "session": "round 12 (2026-08-16), post-L72 tree",
-    }
-    # two warmup rounds: the r10 cold run showed a single warmup leaves
-    # residual JIT/page-cache cost in the START probe (q1 0.55 -> 0.42
-    # by mid-pack on an idle box), which reads as negative drift
-    for _ in range(2):
-        for _name in canary_names:
-            queries[_name](spark, sf_dir).count()
-
-    def probe() -> dict:
-        out: dict = {}
-        for name in canary_names:
-            t0 = time.time()
-            try:
-                queries[name](spark, sf_dir).count()
-                out[name] = round(time.time() - t0, 3)
-            except Exception:  # noqa: BLE001
-                out[name] = -1.0
-        out["load1"] = round(os.getloadavg()[0], 2)
-        return out
-
-    def baseline_ratios(canary: dict) -> dict | None:
-        """Per-(phase, probe) ratios against the PINNED quiet-box
-        baseline, plus min/median/max — the drift factor's auditable
-        complement (sub-1.0 intra-run drift + start ratios >> 1 reads
-        as 'loaded at start, recovered later'; all ratios ~1 reads as
-        'quiet box throughout'). None off the baseline's SF."""
-        if abs(sf - 0.1) > 1e-9:
-            return None
-        per: dict[str, dict[str, float]] = {}
-        flat: list[float] = []
-        for ph in ("start", "mid", "end"):
-            p = canary.get(ph, {})
-            row = {
-                q: round(p[q] / canary_baseline[q], 4)
-                for q in canary_names
-                if p.get(q, 0) > 0
-            }
-            if row:
-                per[ph] = row
-                flat += list(row.values())
-        if not flat:
-            return None
-        flat.sort()
-        return {
-            "per_probe": per,
-            "min": flat[0],
-            "median": flat[len(flat) // 2],
-            "max": flat[-1],
-        }
-
-    def drift_per_probe(canary: dict) -> dict:
-        """The intra-run drift decomposed per (phase, probe) — the
-        scalar canary_drift's auditable complement."""
-        start = canary.get("start", {})
-        out: dict[str, dict[str, float]] = {}
-        for ph in ("mid", "end"):
-            p = canary.get(ph, {})
-            row = {
-                q: round(p[q] / start[q], 4)
-                for q in canary_names
-                if start.get(q, 0) > 0 and p.get(q, 0) > 0
-            }
-            if row:
-                out[ph] = row
-        return out
-
-    def drift_factor(canary: dict) -> float:
-        """Mean probe slowdown across the three checkpoints relative to
-        the start checkpoint — ~1.0 on a quiet host, >1 when capacity
-        degraded mid-run. Approximates the average capacity loss the
-        pack executed under, so wall/drift estimates the quiet-host
-        wall."""
-        start = canary.get("start", {})
-        phases = []
-        for ph in ("start", "mid", "end"):
-            p = canary.get(ph, {})
-            rs = [
-                p[q] / start[q]
-                for q in canary_names
-                if start.get(q, 0) > 0 and p.get(q, 0) > 0
-            ]
-            if rs:
-                phases.append(sum(rs) / len(rs))
-        return round(sum(phases) / len(phases), 4) if phases else 1.0
 
     # Streaming placement (optimization round 12, guide §2.6 "overlap
     # independent jobs"): the 15 availableNow drains are independent
@@ -347,30 +253,20 @@ def main() -> None:
     # 353 s — past two workers GIL contention inflates every in-flight
     # build (and with it the timed loop's blocking waits). Width is 2,
     # dropping to 1 on the driver's lower-core scaling runs (<16
-    # cores, i.e. the batch-8 behavior); SPARK_GRAFT_PREBUILD_THREADS
-    # overrides for isolation work. Builds remain bounded to a fixed
+    # cores, i.e. the batch-8 behavior). Builds remain bounded to a fixed
     # look-ahead so eagerly-materialized frames don't stack far ahead
     # of the timed loop.
     _cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32") or 32)
-    _pb_threads = int(os.environ.get("SPARK_GRAFT_PREBUILD_THREADS") or 0) or (
-        2 if _cpus >= 16 else 1
-    )
+    _pb_threads = 2 if _cpus >= 16 else 1
     _pb_lookahead = 64
 
-    def run_pass(pass_name: str) -> tuple[dict[str, float], float, dict, dict]:
+    def run_pass(pass_name: str) -> tuple[dict[str, float], float, float, dict]:
         import threading
 
         t: dict[str, float] = {}
-        canary: dict = {}
-        half = len(ordered) // 2
+        cpu0 = cpu_times()
         t_all = time.time()
-        probe_wall = 0.0
-        p0 = time.time()
-        canary["start"] = probe()
-        probe_wall += time.time() - p0
-        # after the start probe (so the probe measures ambient capacity,
-        # not drain load): start the streaming drains + artifact fits in
-        # the background
+        # start the streaming drains + artifact fits in the background
         kickoff_stream_prefetch()
         kickoff_stage_prefetch()
 
@@ -419,11 +315,7 @@ def main() -> None:
         for _ in range(_pb_threads):
             threading.Thread(target=prebuild, daemon=True).start()
 
-        for i, (name, fn) in enumerate(ordered):
-            if i == half:
-                p0 = time.time()
-                canary["mid"] = probe()
-                probe_wall += time.time() - p0
+        for name, fn in ordered:
             t0 = time.time()
             # never build the same query on two threads: if a
             # prebuilder is mid-build on THIS query, wait for it (the
@@ -443,21 +335,18 @@ def main() -> None:
             except Exception as e:  # noqa: BLE001 — recorded in query_errors
                 t[name] = -1.0
                 query_errors[pass_name][name] = f"{type(e).__name__}: {e}"[:500]
-        p0 = time.time()
-        canary["end"] = probe()
-        probe_wall += time.time() - p0
-        # total excludes canary probe time: it remains the pack wall
-        return t, round(time.time() - t_all - probe_wall, 3), canary, dict(pb_times)
+        wall = round(time.time() - t_all, 3)
+        return t, wall, round(stolen_share(cpu0, cpu_times()), 4), dict(pb_times)
 
-    timings, total, canary, prebuild_times = run_pass("cold")
+    timings, total, steal, prebuild_times = run_pass("cold")
     # optional warm second pass (stage caches hot, codegen compiled):
     # SPARK_GRAFT_WARM_PASS=1 — off by default to keep the driver's
     # per-round bench single-pass
     warm: dict[str, float] | None = None
     warm_total = None
-    warm_canary: dict | None = None
+    warm_steal = None
     if os.environ.get("SPARK_GRAFT_WARM_PASS"):
-        warm, warm_total, warm_canary, _ = run_pass("warm")
+        warm, warm_total, warm_steal, _ = run_pass("warm")
 
     # The driver captures only the tail of stdout (~4000 chars) and parses
     # the JSON line from it. Keep the line compact: total + the 20 slowest
@@ -506,20 +395,12 @@ def main() -> None:
         "query_errors": {k: dict(sorted(v.items())) for k, v in query_errors.items()},
         "load_avg_start": list(load_start),
         "load_avg_end": list(os.getloadavg()),
-        "canary": canary,
-        "canary_drift": drift_factor(canary),
-        "canary_drift_per_probe": drift_per_probe(canary),
-        "canary_baseline": canary_baseline,
-        "canary_baseline_provenance": canary_baseline_provenance,
-        "canary_vs_baseline": baseline_ratios(canary),
-        "wall_canary_adjusted": round(total / max(drift_factor(canary), 1e-9), 3),
+        "steal_share": steal,
     }
     if warm is not None:
         full["warm_value"] = warm_total
         full["warm_queries"] = warm
-        full["warm_canary"] = warm_canary
-        full["warm_canary_drift"] = drift_factor(warm_canary)
-        full["warm_canary_vs_baseline"] = baseline_ratios(warm_canary)
+        full["warm_steal_share"] = warm_steal
     # per-drain StreamingQueryProgress evidence (input rows, batches,
     # peak state rows, trigger wall): the streaming family's work runs
     # under the engine's own job group, so this registry — not stage
@@ -560,11 +441,7 @@ def main() -> None:
             "n_errors": full["n_errors"],
             "stage": f"{n_hit}h/{n_miss}m",
             "load1": round(load_start[0], 1),
-            "canary_drift": full["canary_drift"],
-            "canary_vs_base": (
-                (full["canary_vs_baseline"] or {}).get("median")
-            ),
-            "wall_canary_adjusted": full["wall_canary_adjusted"],
+            "steal_share": steal,
             "full": "BENCH_FULL.json",
             **({"warm_value": warm_total} if warm is not None else {}),
         },

@@ -6,7 +6,11 @@ helper frames and the source-table frames of ``sources.catalog``. It lives
 here, below both layers, so either can import it.
 
 ``memoize_checkpoint`` is the probed localCheckpoint memo — one
-registry, two consumers.
+registry, three consumer families: the streaming drains
+(``streaming.stream.run_to_memory`` and the drain-and-stage queries of
+``plans.queries_models``), the report family's ``canonical_legs_frame``
+(``plans.queries_trades``) and the two near-duplicate frames,
+``neardup_verified`` and ``neardup_labels`` (``plans.queries_llmdata``).
 
 A deterministic expensive frame (a drained stream, the report family's
 canonical legs superset) is built once per (application, name,

@@ -17,7 +17,7 @@ from pyspark.sql import functions as F
 
 from ..sources.catalog import load_table
 from .queries import ORACLE, literal_grid, query, r6, session_frame_cache, shared_small_frame
-from .queries_stats import _S_SQL, _series, _w
+from .queries_stats import _S_SQL, _baseline_forecasts, _series, _w
 
 
 # ---------------------------------------------------------------------------
@@ -1114,6 +1114,34 @@ _AUDIT_SQL = f"""
 """
 
 
+def _audit_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """``_baseline_forecasts`` cut into consecutive full ``_ESAFE_BLOCK``-row
+    audit windows (one window = one audit file), with each window's RMSE
+    for naive (``r_n``), ma3 (``r_3``), ma10 (``r_10``) and their
+    equal-weight ensemble (``r_e``): ``_AUDIT_SQL``'s ``a`` frame."""
+    f = _baseline_forecasts(spark, sf_dir)
+
+    def rmse(pred):
+        return F.sqrt(F.avg(F.pow(F.col("value") - pred, 2)))
+
+    return (
+        f.withColumn(
+            "audit_id", F.floor((F.col("rn") - 11) / _ESAFE_BLOCK).cast("int")
+        )
+        .groupBy("user_id", "audit_id")
+        .agg(
+            F.count(F.lit(1)).alias("bn"),
+            rmse(F.col("prev")).alias("r_n"),
+            rmse(F.col("f_ma3")).alias("r_3"),
+            rmse(F.col("f_ma10")).alias("r_10"),
+            rmse((F.col("prev") + F.col("f_ma3") + F.col("f_ma10")) / 3.0).alias(
+                "r_e"
+            ),
+        )
+        .filter(F.col("bn") == _ESAFE_BLOCK)
+    )
+
+
 @query(
     "ensemble_safety_policy",
     oracle=f"""
@@ -1176,37 +1204,7 @@ def ensemble_safety_policy(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: one window pass, one (user, audit) groupBy, then
     key-cardinality frames joined on user_id. No UDF, no collect."""
-    s = _series(spark, sf_dir)
-    wp = _w()
-    f = s.select(
-        "user_id",
-        "rn",
-        "value",
-        F.lag("value", 1).over(wp).alias("prev"),
-        F.avg("value").over(_w((-3, -1))).alias("f_ma3"),
-        F.avg("value").over(_w((-10, -1))).alias("f_ma10"),
-    ).filter(F.col("rn") >= 11)
-
-    def rmse(pred):
-        return F.sqrt(F.avg(F.pow(F.col("value") - pred, 2)))
-
-    a = (
-        f.withColumn(
-            "audit_id",
-            F.floor((F.col("rn") - 11) / _ESAFE_BLOCK).cast("int"),
-        )
-        .groupBy("user_id", "audit_id")
-        .agg(
-            F.count(F.lit(1)).alias("bn"),
-            rmse(F.col("prev")).alias("r_n"),
-            rmse(F.col("f_ma3")).alias("r_3"),
-            rmse(F.col("f_ma10")).alias("r_10"),
-            rmse(
-                (F.col("prev") + F.col("f_ma3") + F.col("f_ma10")) / 3.0
-            ).alias("r_e"),
-        )
-        .filter(F.col("bn") == _ESAFE_BLOCK)
-    )
+    a = _audit_windows(spark, sf_dir)
     best = F.least("r_n", "r_3", "r_10")
     r = a.select(
         "user_id",
@@ -1304,37 +1302,7 @@ def preselection_default_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     The no-recent-ratios branch collapses into the insufficient-audits one
     here (a user with zero audits has no row at all). Same audit-window
     frame as `ensemble_safety_policy`; key-cardinality aggregation."""
-    s = _series(spark, sf_dir)
-    wp = _w()
-    f = s.select(
-        "user_id",
-        "rn",
-        "value",
-        F.lag("value", 1).over(wp).alias("prev"),
-        F.avg("value").over(_w((-3, -1))).alias("f_ma3"),
-        F.avg("value").over(_w((-10, -1))).alias("f_ma10"),
-    ).filter(F.col("rn") >= 11)
-
-    def rmse(pred):
-        return F.sqrt(F.avg(F.pow(F.col("value") - pred, 2)))
-
-    a = (
-        f.withColumn(
-            "audit_id",
-            F.floor((F.col("rn") - 11) / _ESAFE_BLOCK).cast("int"),
-        )
-        .groupBy("user_id", "audit_id")
-        .agg(
-            F.count(F.lit(1)).alias("bn"),
-            rmse(F.col("prev")).alias("r_n"),
-            rmse(F.col("f_ma3")).alias("r_3"),
-            rmse(F.col("f_ma10")).alias("r_10"),
-            rmse(
-                (F.col("prev") + F.col("f_ma3") + F.col("f_ma10")) / 3.0
-            ).alias("r_e"),
-        )
-        .filter(F.col("bn") == _ESAFE_BLOCK)
-    )
+    a = _audit_windows(spark, sf_dir)
     r = a.select(
         "user_id",
         (F.col("r_e") / F.least("r_n", "r_3", "r_10")).alias("ratio"),
@@ -2147,38 +2115,7 @@ def ensemble_monitor_status(spark: SparkSession, sf_dir: str) -> DataFrame:
 @session_frame_cache
 def _monitor_tick_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Shared per-ticker stat block for the two monitor queries."""
-    from .queries_stats import _series, _w
-
-    s = _series(spark, sf_dir)
-    wp = _w()
-    f = s.select(
-        "user_id",
-        "rn",
-        "value",
-        F.lag("value", 1).over(wp).alias("prev"),
-        F.avg("value").over(_w((-3, -1))).alias("f_ma3"),
-        F.avg("value").over(_w((-10, -1))).alias("f_ma10"),
-    ).filter(F.col("rn") >= 11)
-
-    def rmse(pred):
-        return F.sqrt(F.avg(F.pow(F.col("value") - pred, 2)))
-
-    a = (
-        f.withColumn(
-            "audit_id", F.floor((F.col("rn") - 11) / _ESAFE_BLOCK).cast("int")
-        )
-        .groupBy("user_id", "audit_id")
-        .agg(
-            F.count(F.lit(1)).alias("bn"),
-            rmse(F.col("prev")).alias("r_n"),
-            rmse(F.col("f_ma3")).alias("r_3"),
-            rmse(F.col("f_ma10")).alias("r_10"),
-            rmse((F.col("prev") + F.col("f_ma3") + F.col("f_ma10")) / 3.0).alias(
-                "r_e"
-            ),
-        )
-        .filter(F.col("bn") == _ESAFE_BLOCK)
-    )
+    a = _audit_windows(spark, sf_dir)
     w10 = (1 / F.col("r_10")) / (
         (1 / F.col("r_n")) + (1 / F.col("r_3")) + (1 / F.col("r_10"))
     )
@@ -2453,36 +2390,7 @@ def forecast_audit_fleet_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     agg native) cross-joined as broadcast single-row scalars; exact
     percentiles run on the bounded (key x window) audit frame, never on
     raw rows. No UDF, no collect, no global row-ordering stage."""
-    s = _series(spark, sf_dir)
-    wp = _w()
-    f = s.select(
-        "user_id",
-        "rn",
-        "value",
-        F.lag("value", 1).over(wp).alias("prev"),
-        F.avg("value").over(_w((-3, -1))).alias("f_ma3"),
-        F.avg("value").over(_w((-10, -1))).alias("f_ma10"),
-    ).filter(F.col("rn") >= 11)
-
-    def rmse(pred):
-        return F.sqrt(F.avg(F.pow(F.col("value") - pred, 2)))
-
-    a = (
-        f.withColumn(
-            "audit_id", F.floor((F.col("rn") - 11) / _ESAFE_BLOCK).cast("int")
-        )
-        .groupBy("user_id", "audit_id")
-        .agg(
-            F.count(F.lit(1)).alias("bn"),
-            rmse(F.col("prev")).alias("r_n"),
-            rmse(F.col("f_ma3")).alias("r_3"),
-            rmse(F.col("f_ma10")).alias("r_10"),
-            rmse((F.col("prev") + F.col("f_ma3") + F.col("f_ma10")) / 3.0).alias(
-                "r_e"
-            ),
-        )
-        .filter(F.col("bn") == _ESAFE_BLOCK)
-    )
+    a = _audit_windows(spark, sf_dir)
     raw_ratio = F.col("r_e") / F.least("r_n", "r_3", "r_10")
     rows = a.select(
         "user_id",
@@ -3096,16 +3004,7 @@ def model_improvement_layers(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .queries_trades import _exit_trades_frame
 
     # layer 1 — audit-window frame with per-window MA10 direction accuracy
-    s = _series(spark, sf_dir)
-    wp = _w()
-    f = s.select(
-        "user_id",
-        "rn",
-        "value",
-        F.lag("value", 1).over(wp).alias("prev"),
-        F.avg("value").over(_w((-3, -1))).alias("f_ma3"),
-        F.avg("value").over(_w((-10, -1))).alias("f_ma10"),
-    ).filter(F.col("rn") >= 11)
+    f = _baseline_forecasts(spark, sf_dir)
 
     def rmse(pred):
         return F.sqrt(F.avg(F.pow(F.col("value") - pred, 2)))
@@ -3317,7 +3216,7 @@ def model_improvement_layers(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # layer 4 — calibration of the logistic momentum confidence
     w20 = _w((-19, 0))
-    calf = s.select(
+    calf = _series(spark, sf_dir).select(
         "user_id",
         "rn",
         "value",
@@ -3507,36 +3406,7 @@ def data_sufficiency_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .queries_trades import _exit_trades_frame
 
     # layer 1 — audit-window lift with the ensemble warm-up plant
-    s = _series(spark, sf_dir)
-    wp = _w()
-    f = s.select(
-        "user_id",
-        "rn",
-        "value",
-        F.lag("value", 1).over(wp).alias("prev"),
-        F.avg("value").over(_w((-3, -1))).alias("f_ma3"),
-        F.avg("value").over(_w((-10, -1))).alias("f_ma10"),
-    ).filter(F.col("rn") >= 11)
-
-    def rmse(pred):
-        return F.sqrt(F.avg(F.pow(F.col("value") - pred, 2)))
-
-    a = (
-        f.withColumn(
-            "audit_id", F.floor((F.col("rn") - 11) / _ESAFE_BLOCK).cast("int")
-        )
-        .groupBy("user_id", "audit_id")
-        .agg(
-            F.count(F.lit(1)).alias("bn"),
-            rmse(F.col("prev")).alias("r_n"),
-            rmse(F.col("f_ma3")).alias("r_3"),
-            rmse(F.col("f_ma10")).alias("r_10"),
-            rmse((F.col("prev") + F.col("f_ma3") + F.col("f_ma10")) / 3.0).alias(
-                "r_e"
-            ),
-        )
-        .filter(F.col("bn") == _ESAFE_BLOCK)
-    )
+    a = _audit_windows(spark, sf_dir)
     ratio = F.col("r_e") / F.least("r_n", "r_3", "r_10")
     arow = a.select(
         "user_id",
@@ -3868,36 +3738,7 @@ def gate_failure_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: three bounded sub-aggregates cross-joined as single-row
     scalars; the union is a constant ~23 rows. No UDF, no collect."""
     # lift gate over the audit-window frame
-    s = _series(spark, sf_dir)
-    wp = _w()
-    f = s.select(
-        "user_id",
-        "rn",
-        "value",
-        F.lag("value", 1).over(wp).alias("prev"),
-        F.avg("value").over(_w((-3, -1))).alias("f_ma3"),
-        F.avg("value").over(_w((-10, -1))).alias("f_ma10"),
-    ).filter(F.col("rn") >= 11)
-
-    def rmse(pred):
-        return F.sqrt(F.avg(F.pow(F.col("value") - pred, 2)))
-
-    a = (
-        f.withColumn(
-            "audit_id", F.floor((F.col("rn") - 11) / _ESAFE_BLOCK).cast("int")
-        )
-        .groupBy("user_id", "audit_id")
-        .agg(
-            F.count(F.lit(1)).alias("bn"),
-            rmse(F.col("prev")).alias("r_n"),
-            rmse(F.col("f_ma3")).alias("r_3"),
-            rmse(F.col("f_ma10")).alias("r_10"),
-            rmse((F.col("prev") + F.col("f_ma3") + F.col("f_ma10")) / 3.0).alias(
-                "r_e"
-            ),
-        )
-        .filter(F.col("bn") == _ESAFE_BLOCK)
-    )
+    a = _audit_windows(spark, sf_dir)
     ratio = F.col("r_e") / F.least("r_n", "r_3", "r_10")
     lg = a.select(ratio.alias("ratio")).agg(
         F.avg(F.when(F.col("ratio") > 1.1, 1.0).otherwise(0.0)).alias(
@@ -4326,36 +4167,7 @@ def capital_readiness_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: six bounded aggregates cross-joined as single-row scalars.
     No UDF, no collect."""
     # R5 — lift CI over audit windows
-    s = _series(spark, sf_dir)
-    wp = _w()
-    f = s.select(
-        "user_id",
-        "rn",
-        "value",
-        F.lag("value", 1).over(wp).alias("prev"),
-        F.avg("value").over(_w((-3, -1))).alias("f_ma3"),
-        F.avg("value").over(_w((-10, -1))).alias("f_ma10"),
-    ).filter(F.col("rn") >= 11)
-
-    def rmse(pred):
-        return F.sqrt(F.avg(F.pow(F.col("value") - pred, 2)))
-
-    a = (
-        f.withColumn(
-            "audit_id", F.floor((F.col("rn") - 11) / _ESAFE_BLOCK).cast("int")
-        )
-        .groupBy("user_id", "audit_id")
-        .agg(
-            F.count(F.lit(1)).alias("bn"),
-            rmse(F.col("prev")).alias("r_n"),
-            rmse(F.col("f_ma3")).alias("r_3"),
-            rmse(F.col("f_ma10")).alias("r_10"),
-            rmse((F.col("prev") + F.col("f_ma3") + F.col("f_ma10")) / 3.0).alias(
-                "r_e"
-            ),
-        )
-        .filter(F.col("bn") == _ESAFE_BLOCK)
-    )
+    a = _audit_windows(spark, sf_dir)
     ratio = F.col("r_e") / F.least("r_n", "r_3", "r_10")
     lift = a.select((1.0 - ratio).alias("l")).agg(
         F.count(F.lit(1)).alias("n_used"),
@@ -4487,7 +4299,7 @@ def capital_readiness_check(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # R4 — calibration pairs + Brier
     w20 = _w((-19, 0))
-    calf = s.select(
+    calf = _series(spark, sf_dir).select(
         "user_id",
         "rn",
         "value",
@@ -4997,16 +4809,7 @@ def forecast_model_comparison(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: one window pass + two (key, window) aggregations joined on
     their co-partitioned key. No UDF."""
-    s = _series(spark, sf_dir)
-    wp = _w()
-    f = s.select(
-        "user_id",
-        "rn",
-        "value",
-        F.lag("value", 1).over(wp).alias("prev"),
-        F.avg("value").over(_w((-3, -1))).alias("f_ma3"),
-        F.avg("value").over(_w((-10, -1))).alias("f_ma10"),
-    ).filter(F.col("rn") >= 11)
+    f = _baseline_forecasts(spark, sf_dir)
 
     def rmse(pred):
         return F.sqrt(F.avg(F.pow(F.col("value") - pred, 2)))
@@ -5194,36 +4997,7 @@ def order_cache_replay_evidence(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: one (key, window) frame + two bounded model-type
     aggregations. No UDF."""
-    s = _series(spark, sf_dir)
-    wp = _w()
-    f = s.select(
-        "user_id",
-        "rn",
-        "value",
-        F.lag("value", 1).over(wp).alias("prev"),
-        F.avg("value").over(_w((-3, -1))).alias("f_ma3"),
-        F.avg("value").over(_w((-10, -1))).alias("f_ma10"),
-    ).filter(F.col("rn") >= 11)
-
-    def rmse(pred):
-        return F.sqrt(F.avg(F.pow(F.col("value") - pred, 2)))
-
-    a = (
-        f.withColumn(
-            "audit_id", F.floor((F.col("rn") - 11) / _ESAFE_BLOCK).cast("int")
-        )
-        .groupBy("user_id", "audit_id")
-        .agg(
-            F.count(F.lit(1)).alias("bn"),
-            rmse(F.col("prev")).alias("r_n"),
-            rmse(F.col("f_ma3")).alias("r_3"),
-            rmse(F.col("f_ma10")).alias("r_10"),
-            rmse((F.col("prev") + F.col("f_ma3") + F.col("f_ma10")) / 3.0).alias(
-                "r_e"
-            ),
-        )
-        .filter(F.col("bn") == _ESAFE_BLOCK)
-    )
+    a = _audit_windows(spark, sf_dir)
     model = (
         F.when(F.col("user_id") % 4 == 0, "SARIMAX")
         .when(F.col("user_id") % 4 == 1, "GARCH")
@@ -5568,36 +5342,7 @@ def order_learner_health_check(spark: SparkSession, sf_dir: str) -> DataFrame:
 @session_frame_cache
 def _olh_frames(spark: SparkSession, sf_dir: str):
     """(cache, fits) frames shared by the learner-health and budget checks."""
-    s = _series(spark, sf_dir)
-    wp = _w()
-    f = s.select(
-        "user_id",
-        "rn",
-        "value",
-        F.lag("value", 1).over(wp).alias("prev"),
-        F.avg("value").over(_w((-3, -1))).alias("f_ma3"),
-        F.avg("value").over(_w((-10, -1))).alias("f_ma10"),
-    ).filter(F.col("rn") >= 11)
-
-    def rmse(pred):
-        return F.sqrt(F.avg(F.pow(F.col("value") - pred, 2)))
-
-    a = (
-        f.withColumn(
-            "audit_id", F.floor((F.col("rn") - 11) / _ESAFE_BLOCK).cast("int")
-        )
-        .groupBy("user_id", "audit_id")
-        .agg(
-            F.count(F.lit(1)).alias("bn"),
-            rmse(F.col("prev")).alias("r_n"),
-            rmse(F.col("f_ma3")).alias("r_3"),
-            rmse(F.col("f_ma10")).alias("r_10"),
-            rmse((F.col("prev") + F.col("f_ma3") + F.col("f_ma10")) / 3.0).alias(
-                "r_e"
-            ),
-        )
-        .filter(F.col("bn") == _ESAFE_BLOCK)
-    )
+    a = _audit_windows(spark, sf_dir)
     model = (
         F.when(F.col("user_id") % 4 == 0, "SARIMAX")
         .when(F.col("user_id") % 4 == 1, "GARCH")

@@ -2019,7 +2019,7 @@ def _prefetch_streaming_family(
     concurrent streaming queries natively, so the first family query
     kicks off all six drains on daemon threads and joins them — the
     family then pays ~max(floor) once, and every member reads its
-    memoized (`memoize_drain`) result. Thread errors are swallowed here:
+    memoized (`memoize_checkpoint`) result. Thread errors are swallowed here:
     the owning query's own (serial, cache-missing) call re-raises them
     attributably. Results are bit-identical to serial drains — each
     drain is an independent deterministic job; only scheduling overlaps.
@@ -2319,7 +2319,7 @@ def streaming_upsert_landed(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import functions as FF
 
     from ..streaming import events_stream, run_upsert_sink
-    from ..streaming.stream import memoize_drain
+    from ..operators.memo import memoize_checkpoint
 
     _prefetch_streaming_family(spark, sf_dir)
     def _drain_and_stage() -> DataFrame:
@@ -2356,11 +2356,11 @@ def streaming_upsert_landed(spark: SparkSession, sf_dir: str) -> DataFrame:
             .orderBy("event_type")
         )
 
-    # memoize_drain's localCheckpoint both detaches the result from the
+    # memoize_checkpoint's localCheckpoint both detaches the result from the
     # temp files (a later fresh drain wipes the directory) and lets
     # repeat consumers skip the sink round trip; the oracle stage files
     # persist from the first drain
-    return memoize_drain(spark, "q_upsert_landed", sf_dir, _drain_and_stage)
+    return memoize_checkpoint(spark, "q_upsert_landed", sf_dir, _drain_and_stage)
 
 
 @query(
@@ -2403,7 +2403,7 @@ def streaming_manifest_sink_census(
 
     from ..sources import pydatasource
     from ..streaming import events_stream
-    from ..streaming.stream import memoize_drain
+    from ..operators.memo import memoize_checkpoint
 
     _prefetch_streaming_family(spark, sf_dir)
 
@@ -2462,7 +2462,7 @@ def streaming_manifest_sink_census(
             ).alias("sum_value"),
         )
 
-    return memoize_drain(
+    return memoize_checkpoint(
         spark, "q_manifest_sink_census", sf_dir, _drain_and_census
     )
 
@@ -2530,7 +2530,8 @@ def streaming_late_drop_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import functions as FF
 
     from ..streaming import drain_session
-    from ..streaming.stream import memoize_drain, run_to_memory
+    from ..operators.memo import memoize_checkpoint
+    from ..streaming.stream import run_to_memory
 
     _prefetch_streaming_family(spark, sf_dir)
 
@@ -2633,7 +2634,7 @@ def streaming_late_drop_census(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
 
-    return memoize_drain(
+    return memoize_checkpoint(
         spark, "q_late_drop_census", sf_dir, _drain_and_census
     )
 
@@ -2691,10 +2692,10 @@ def streaming_idle_expiry_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import tempfile
 
+    from ..operators.memo import memoize_checkpoint
     from ..streaming.stream import (
         drain_session,
         idle_user_census_tws,
-        memoize_drain,
         run_to_memory,
     )
 
@@ -2755,7 +2756,7 @@ def streaming_idle_expiry_census(spark: SparkSession, sf_dir: str) -> DataFrame:
         # keep it explicit so a staging change cannot leak the sentinel
         return out.filter(F.col("user_id") >= 0)
 
-    return memoize_drain(
+    return memoize_checkpoint(
         spark, "q_idle_expiry_census", sf_dir, _drain_and_census
     )
 
@@ -2845,9 +2846,9 @@ def streaming_topk_leaderboard_census(
     import shutil
     import tempfile
 
+    from ..operators.memo import memoize_checkpoint
     from ..streaming.stream import (
         drain_session,
-        memoize_drain,
         run_to_memory,
         topk_leaderboard_tws,
     )
@@ -2903,7 +2904,7 @@ def streaming_topk_leaderboard_census(
         )
         return out.filter(F.col("user_id") >= 0)
 
-    return memoize_drain(
+    return memoize_checkpoint(
         spark, "q_topk_leaderboard_census", sf_dir, _drain_and_census
     )
 
@@ -2964,9 +2965,9 @@ def streaming_warmstart_handoff_census(
     import shutil
     import tempfile
 
+    from ..operators.memo import memoize_checkpoint
     from ..streaming.stream import (
         drain_session,
-        memoize_drain,
         run_to_memory,
         warmstart_census_tws,
     )
@@ -3048,7 +3049,7 @@ def streaming_warmstart_handoff_census(
         )
         return out.filter(F.col("user_id") >= 0)
 
-    return memoize_drain(
+    return memoize_checkpoint(
         spark, "q_warmstart_handoff_census", sf_dir, _drain_and_census
     )
 
@@ -3174,7 +3175,8 @@ def streaming_outer_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..sources.catalog import load_table
     from ..streaming import drain_session, run_to_memory
-    from ..streaming.stream import memoize_drain, view_purchase_outer_join
+    from ..operators.memo import memoize_checkpoint
+    from ..streaming.stream import view_purchase_outer_join
 
     def _drain() -> DataFrame:
         ev = load_table(spark, sf_dir, "events").filter(
@@ -3217,7 +3219,7 @@ def streaming_outer_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
             FF.col("v_user") >= 0
         )
 
-    out = memoize_drain(spark, "q_stream_outer_attr", sf_dir, _drain)
+    out = memoize_checkpoint(spark, "q_stream_outer_attr", sf_dir, _drain)
     return out.groupBy(FF.col("v_user").alias("user_id")).agg(
         FF.count(FF.lit(1)).cast("long").alias("n_rows"),
         FF.count("buy_id").cast("long").alias("n_matched"),
@@ -3289,7 +3291,8 @@ def streaming_full_outer_census(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..sources.catalog import load_table
     from ..streaming import drain_session
-    from ..streaming.stream import memoize_drain, view_purchase_full_outer_join
+    from ..operators.memo import memoize_checkpoint
+    from ..streaming.stream import view_purchase_full_outer_join
 
     def _drain() -> DataFrame:
         ev = load_table(spark, sf_dir, "events").filter(
@@ -3334,7 +3337,7 @@ def streaming_full_outer_census(spark: SparkSession, sf_dir: str) -> DataFrame:
             FF.coalesce(FF.col("v_user"), FF.col("b_user")) >= 0
         )
 
-    out = memoize_drain(spark, "q_stream_full_outer", sf_dir, _drain)
+    out = memoize_checkpoint(spark, "q_stream_full_outer", sf_dir, _drain)
     matched = FF.col("buy_id").isNotNull() & FF.col("view_ts").isNotNull()
     return out.groupBy(
         FF.coalesce(FF.col("v_user"), FF.col("b_user")).alias("user_id")

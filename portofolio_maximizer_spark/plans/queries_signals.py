@@ -14,7 +14,7 @@ from pyspark.sql import functions as F
 from ..functions.scalars import chi2_sf1, chi2_sf1_sql, epoch_seconds
 from ..sources.catalog import load_table
 from .queries import literal_grid, query, r6, session_frame_cache, shared_small_frame
-from .queries_stats import _S_SQL, _series, _w
+from .queries_stats import _S_SQL, _baseline_forecasts, _series, _w
 
 
 # ---------------------------------------------------------------------------
@@ -1445,16 +1445,7 @@ def ensemble_candidate_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
     The naive lag-1 model's predicted direction is 0 (no change), so its
     DA is the no-change hit rate — the same degenerate-DA behavior the
     reference's DA cap exists for (`_apply_da_cap`)."""
-    s = _series(spark, sf_dir)
-    wp = _w()
-    f = s.select(
-        "user_id",
-        "rn",
-        "value",
-        F.lag("value", 1).over(wp).alias("prev"),
-        F.avg("value").over(_w((-3, -1))).alias("f_ma3"),
-        F.avg("value").over(_w((-10, -1))).alias("f_ma10"),
-    ).filter(F.col("rn") >= 11)
+    f = _baseline_forecasts(spark, sf_dir)
 
     def rmse(c):
         return F.sqrt(F.avg(F.pow(F.col("value") - F.col(c), 2)))
@@ -1672,16 +1663,7 @@ def ensemble_diversified_selection(spark: SparkSession, sf_dir: str) -> DataFram
     Scale: one window pass + one groupBy per user, then a 5-row broadcast
     candidate dim and two per-user single-row frames joined on user_id —
     every post-agg frame is key-cardinality, never row-cardinality."""
-    s = _series(spark, sf_dir)
-    wp = _w()
-    f = s.select(
-        "user_id",
-        "rn",
-        "value",
-        F.lag("value", 1).over(wp).alias("prev"),
-        F.avg("value").over(_w((-3, -1))).alias("f_ma3"),
-        F.avg("value").over(_w((-10, -1))).alias("f_ma10"),
-    ).filter(F.col("rn") >= 11)
+    f = _baseline_forecasts(spark, sf_dir)
 
     def rmse(c):
         return F.sqrt(F.avg(F.pow(F.col("value") - F.col(c), 2)))

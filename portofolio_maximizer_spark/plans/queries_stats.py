@@ -62,6 +62,23 @@ def _w(frame: tuple[int, int] | None = None) -> Window:
     return w.rowsBetween(*frame) if frame else w
 
 
+def _baseline_forecasts(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-ticker baseline forecasters over ``_series``: naive (lag 1 as
+    ``prev``), ma3 and ma10, from row 11 on so every forecast has its full
+    look-back. The frame the ensemble-safety and forecaster-audit gates
+    score."""
+    s = _series(spark, sf_dir)
+    wp = _w()
+    return s.select(
+        "user_id",
+        "rn",
+        "value",
+        F.lag("value", 1).over(wp).alias("prev"),
+        F.avg("value").over(_w((-3, -1))).alias("f_ma3"),
+        F.avg("value").over(_w((-10, -1))).alias("f_ma10"),
+    ).filter(F.col("rn") >= 11)
+
+
 # ---------------------------------------------------------------------------
 # W6 — exact rolling quantile (CVaR proxy)
 # ---------------------------------------------------------------------------

@@ -63,6 +63,9 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # o_orderdate cohorts, etc.) would throw. Setting the conf at read time
     # keeps the scans native-LTZ — no cast nodes, predicate pushdown intact.
     spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
+    # One Python worker pool for RDD tasks and Arrow fits on a caller's
+    # vanilla session too, as ``session.get_spark`` sets it (runtime conf).
+    spark.conf.set("spark.sql.execution.pyspark.udf.simplifiedTraceback.enabled", "false")
     if name == "events":
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         df = spark.read.parquet(path)

@@ -41,6 +41,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from ..operators.memo import memoize_checkpoint
+
 # NOTE: the events table's ts parquet encoding has changed across testdata
 # generations (TIMESTAMP(NANOS) → plain TIMESTAMP(MICROS)). The stream
 # therefore takes its schema from the file footer (one cheap batch read of
@@ -269,17 +271,6 @@ def vol_spike_alerts(stream: DataFrame) -> DataFrame:
             timeoutConf="NoTimeout",
         )
     )
-
-
-# Drained batch results are memoized through the shared probed-
-# localCheckpoint registry (operators/memo.py): an availableNow drain
-# over a fixed input directory is deterministic, so each consumer after
-# the first should not re-pay the micro-batch harness floor
-# (~2.5–5.6 s per drain on local[32]) — the same memoization the report
-# family's `canonical_legs_frame` uses. The aliases keep this module's
-# historical names for tests and callers.
-from ..operators.memo import _CHECKPOINT_CACHE as _DRAIN_CACHE  # noqa: E402
-from ..operators.memo import memoize_checkpoint as memoize_drain  # noqa: E402
 
 
 #: the RocksDB state-store provider bundled with Spark — no extra jars
@@ -521,7 +512,8 @@ def run_to_memory(
     With ``cache_key`` (callers pass the input directory) the drained
     result is memoized per (application, name, cache_key): the drain is
     deterministic for a fixed input, so repeat consumers read the pinned
-    batch frame instead of re-running the micro-batch. Watermark/state
+    batch frame (``operators.memo.memoize_checkpoint``, probed for block
+    loss) instead of re-running the micro-batch. Watermark/state
     semantics are untouched — the first drain is a real streaming job.
     Tests that deliberately re-drain (determinism pins) omit the key."""
 
@@ -547,7 +539,7 @@ def run_to_memory(
 
     if cache_key is None:
         return _drain()
-    return memoize_drain(stream_df.sparkSession, name, cache_key, _drain)
+    return memoize_checkpoint(stream_df.sparkSession, name, cache_key, _drain)
 
 
 def enriched_stream(stream: DataFrame, dim: DataFrame) -> DataFrame:

@@ -309,28 +309,29 @@ def test_streaming_queries_nonempty(spark, sf_dir):
 def test_drain_memoization_identical_and_probed(spark, sf_dir):
     """r8: repeat calls of a memoized streaming query return the SAME
     rows (the memoized drain is a pinned localCheckpoint of a
-    deterministic availableNow drain), and a poisoned cache entry is
-    rebuilt, not served (the validity probe)."""
+    deterministic availableNow drain), and a cache entry whose blocks are
+    lost is rebuilt, not served (the full-scan ``count()`` probe)."""
+    from portofolio_maximizer_spark.operators import memo
     from portofolio_maximizer_spark.plans import QUERIES as qs
-    from portofolio_maximizer_spark.streaming import stream as st
 
     a = sorted(map(tuple, qs["streaming_vol_alerts"](spark, sf_dir).collect()))
     b = sorted(map(tuple, qs["streaming_vol_alerts"](spark, sf_dir).collect()))
     assert a == b and a
 
-    # poison the cache entry for this (app, name, sf_dir): a frame that
-    # raises on take(1) must be evicted and rebuilt transparently
+    # poison the cache entry for this (app, name, sf_dir): a frame whose
+    # probe scan fails the way lost checkpoint blocks do must be evicted
+    # and rebuilt transparently
     key = (spark.sparkContext.applicationId, "q_stream_alerts", sf_dir)
-    assert key in st._DRAIN_CACHE
+    assert key in memo._CHECKPOINT_CACHE
 
     class _Poison:
-        def take(self, n):
+        def count(self):
             raise RuntimeError("lost checkpoint blocks")
 
-    st._DRAIN_CACHE[key] = _Poison()
+    memo._CHECKPOINT_CACHE[key] = _Poison()
     c = sorted(map(tuple, qs["streaming_vol_alerts"](spark, sf_dir).collect()))
     assert c == a
-    assert st._DRAIN_CACHE[key].__class__.__name__ != "_Poison"
+    assert memo._CHECKPOINT_CACHE[key].__class__.__name__ != "_Poison"
 
 
 def test_drain_progress_evidence_recorded(spark, sf_dir, batch_events):

@@ -371,7 +371,9 @@ def stage_cached(spark: SparkSession, sf_dir: str, name: str, build) -> DataFram
 
     path = _ensure_staged(build, name, sf_dir)
     schema = StructType.fromJson(json.loads(_read_marker(path)["schema"]))
-    return spark.read.schema(schema).parquet(path + "/*.parquet")
+    # the directory, not a glob: Spark skips the marker and ``_SUCCESS``,
+    # and a glob path makes the sink-metadata probe log a missing-file WARN
+    return spark.read.schema(schema).parquet(path)
 
 
 # ---------------------------------------------------------------------------

@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 from ..sources.catalog import load_table
 from .queries import ORACLE, literal_grid, query, r6, session_frame_cache, shared_small_frame
 from .queries_stats import _S_SQL, _baseline_forecasts, _series, _w
+from .queries_trades import _closed_trades, _trade_legs
 
 
 # ---------------------------------------------------------------------------
@@ -3750,37 +3751,8 @@ def gate_failure_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     # profitability proof over production round-trips
-    li = load_table(spark, sf_dir, "lineitem")
-    o = load_table(spark, sf_dir, "orders")
-    net = F.col("l_extendedprice") * (1 - F.col("l_discount"))
-    pmx = li.groupBy("l_orderkey").agg(F.max("l_linenumber").alias("maxline"))
-    pcloses = (
-        li.join(
-            pmx,
-            (li.l_orderkey == pmx.l_orderkey)
-            & (li.l_linenumber == pmx.maxline),
-        )
-        .drop(pmx.l_orderkey)
-        .groupBy("l_orderkey")
-        .agg(
-            F.sum("l_quantity").alias("cq"),
-            F.sum(net).alias("cnet"),
-            F.max("l_shipdate").alias("cship"),
-        )
-    )
-    popens = (
-        li.filter((F.col("l_linenumber") == 1) & (F.col("l_returnflag") != "R"))
-        .groupBy("l_orderkey")
-        .agg(F.sum("l_quantity").alias("oq"), F.sum(net).alias("onet"))
-    )
-    c, op = pcloses.alias("c"), popens.alias("op")
     ptrips = (
-        c.join(op, F.col("op.l_orderkey") == F.col("c.l_orderkey"))
-        .join(
-            o.filter(F.col("o_orderstatus") == "F"),
-            F.col("o_orderkey") == F.col("c.l_orderkey"),
-        )
-        .filter((F.col("oq") > 0) & (F.col("cq") > 0))
+        _closed_trades(spark, sf_dir)
         .select(
             F.round(F.col("cnet") - F.col("onet"), 6).alias("pnl"),
             F.to_date("cship").alias("close_d"),
@@ -4187,31 +4159,7 @@ def capital_readiness_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     # R3 + R6 — production round-trips with lifecycle dates
     li = load_table(spark, sf_dir, "lineitem")
     o = load_table(spark, sf_dir, "orders")
-    net = F.col("l_extendedprice") * (1 - F.col("l_discount"))
-    pmx = li.groupBy("l_orderkey").agg(F.max("l_linenumber").alias("maxline"))
-    pcloses = (
-        li.join(
-            pmx,
-            (li.l_orderkey == pmx.l_orderkey)
-            & (li.l_linenumber == pmx.maxline),
-        )
-        .drop(pmx.l_orderkey)
-        .groupBy("l_orderkey")
-        .agg(
-            F.sum("l_quantity").alias("cq"),
-            F.sum(net).alias("cnet"),
-            F.max("l_shipdate").alias("cship"),
-        )
-    )
-    popens = (
-        li.filter((F.col("l_linenumber") == 1) & (F.col("l_returnflag") != "R"))
-        .groupBy("l_orderkey")
-        .agg(
-            F.sum("l_quantity").alias("oq"),
-            F.sum(net).alias("onet"),
-            F.min("l_shipdate").alias("oship"),
-        )
-    )
+    pcloses, popens = _trade_legs(spark, sf_dir)
     of = o.filter(F.col("o_orderstatus") == "F")
     # R3 and the R6 orphan census share one closes-side pass
     # (optimization round 13, guide §2.4): the previous inner-join ptr +

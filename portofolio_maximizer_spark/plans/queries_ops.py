@@ -31,6 +31,7 @@ from .queries import (
     session_frame_cache,
     shared_small_frame,
 )
+from .queries_trades import _closed_trades, _trade_legs
 
 # ---------------------------------------------------------------------------
 # Platt outcome reconciliation — reference scripts/update_platt_outcomes.py
@@ -300,38 +301,9 @@ def platt_outcome_reconciliation(spark: SparkSession, sf_dir: str) -> DataFrame:
         # shipmax build — materialize once (opt r12 batch 5, guide §2.4)
     ).localCheckpoint(eager=False)
 
-    net = F.col("l_extendedprice") * (1 - F.col("l_discount"))
-    mx = li.groupBy("l_orderkey").agg(F.max("l_linenumber").alias("maxline"))
-    closes = (
-        li.join(
-            mx,
-            (li.l_orderkey == mx.l_orderkey)
-            & (li.l_linenumber == mx.maxline),
-        )
-        .drop(mx.l_orderkey)
-        .groupBy("l_orderkey")
-        .agg(
-            F.sum("l_quantity").alias("cq"),
-            F.sum(net).alias("cnet"),
-            F.max("l_shipdate").alias("cship"),
-        )
-    )
-    opens = (
-        li.filter(
-            (F.col("l_linenumber") == 1) & (F.col("l_returnflag") != "R")
-        )
-        .groupBy("l_orderkey")
-        .agg(F.sum("l_quantity").alias("oq"), F.sum(net).alias("onet"))
-    )
-    c, op = closes.alias("c"), opens.alias("op")
     tk = F.col("c.l_orderkey")
     tr = (
-        c.join(op, F.col("op.l_orderkey") == F.col("c.l_orderkey"))
-        .join(
-            o.filter(F.col("o_orderstatus") == "F"),
-            F.col("o_orderkey") == F.col("c.l_orderkey"),
-        )
-        .filter((F.col("oq") > 0) & (F.col("cq") > 0))
+        _closed_trades(spark, sf_dir)
         .select(
             tk.alias("orderkey"),
             F.concat(
@@ -2902,39 +2874,8 @@ def quant_validation_health_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: one (ticker, day) groupBy over the closed-trade frame, one
     global fold; money sums DECIMAL."""
-    li = load_table(spark, sf_dir, "lineitem")
-    o = load_table(spark, sf_dir, "orders")
-    net = F.col("l_extendedprice") * (1 - F.col("l_discount"))
-    mx = li.groupBy("l_orderkey").agg(F.max("l_linenumber").alias("maxline"))
-    closes = (
-        li.join(
-            mx,
-            (li.l_orderkey == mx.l_orderkey)
-            & (li.l_linenumber == mx.maxline),
-        )
-        .drop(mx.l_orderkey)
-        .groupBy("l_orderkey")
-        .agg(
-            F.sum("l_quantity").alias("cq"),
-            F.sum(net).alias("cnet"),
-            F.to_date(F.max("l_shipdate")).alias("close_d"),
-        )
-    )
-    opens = (
-        li.filter(
-            (F.col("l_linenumber") == 1) & (F.col("l_returnflag") != "R")
-        )
-        .groupBy("l_orderkey")
-        .agg(F.sum("l_quantity").alias("oq"), F.sum(net).alias("onet"))
-    )
-    c, op = closes.alias("c"), opens.alias("op")
     trades = (
-        c.join(op, F.col("op.l_orderkey") == F.col("c.l_orderkey"))
-        .join(
-            o.filter(F.col("o_orderstatus") == "F"),
-            F.col("o_orderkey") == F.col("c.l_orderkey"),
-        )
-        .filter((F.col("oq") > 0) & (F.col("cq") > 0))
+        _closed_trades(spark, sf_dir)
         .select(
             F.concat(
                 F.lit("T"), (F.col("o_custkey") % 25).cast("string")
@@ -3085,39 +3026,8 @@ def regime_state_update(spark: SparkSession, sf_dir: str) -> DataFrame:
     one keyed groupBy."""
     from pyspark.sql import Window
 
-    li = load_table(spark, sf_dir, "lineitem")
-    o = load_table(spark, sf_dir, "orders")
-    net = F.col("l_extendedprice") * (1 - F.col("l_discount"))
-    mx = li.groupBy("l_orderkey").agg(F.max("l_linenumber").alias("maxline"))
-    closes = (
-        li.join(
-            mx,
-            (li.l_orderkey == mx.l_orderkey)
-            & (li.l_linenumber == mx.maxline),
-        )
-        .drop(mx.l_orderkey)
-        .groupBy("l_orderkey")
-        .agg(
-            F.sum("l_quantity").alias("cq"),
-            F.sum(net).alias("cnet"),
-            F.to_date(F.max("l_shipdate")).alias("close_d"),
-        )
-    )
-    opens = (
-        li.filter(
-            (F.col("l_linenumber") == 1) & (F.col("l_returnflag") != "R")
-        )
-        .groupBy("l_orderkey")
-        .agg(F.sum("l_quantity").alias("oq"), F.sum(net).alias("onet"))
-    )
-    c, op = closes.alias("c"), opens.alias("op")
     trades = (
-        c.join(op, F.col("op.l_orderkey") == F.col("c.l_orderkey"))
-        .join(
-            o.filter(F.col("o_orderstatus") == "F"),
-            F.col("o_orderkey") == F.col("c.l_orderkey"),
-        )
-        .filter((F.col("oq") > 0) & (F.col("cq") > 0))
+        _closed_trades(spark, sf_dir)
         .select(
             F.concat(
                 F.lit("T"), (F.col("o_custkey") % 25).cast("string")
@@ -4049,40 +3959,9 @@ def synthetic_contamination_audit(spark: SparkSession, sf_dir: str) -> DataFrame
 
     Scale: single-pass censuses over the closed-trade frame; the SYN
     detail groupBy is bounded by the synthetic-ticker bucket count."""
-    li = load_table(spark, sf_dir, "lineitem")
-    o = load_table(spark, sf_dir, "orders")
-    net = F.col("l_extendedprice") * (1 - F.col("l_discount"))
-    mx = li.groupBy("l_orderkey").agg(F.max("l_linenumber").alias("maxline"))
-    closes = (
-        li.join(
-            mx,
-            (li.l_orderkey == mx.l_orderkey)
-            & (li.l_linenumber == mx.maxline),
-        )
-        .drop(mx.l_orderkey)
-        .groupBy("l_orderkey")
-        .agg(
-            F.sum("l_quantity").alias("cq"),
-            F.sum(net).alias("cnet"),
-            F.to_date(F.max("l_shipdate")).alias("close_d"),
-        )
-    )
-    opens = (
-        li.filter(
-            (F.col("l_linenumber") == 1) & (F.col("l_returnflag") != "R")
-        )
-        .groupBy("l_orderkey")
-        .agg(F.sum("l_quantity").alias("oq"), F.sum(net).alias("onet"))
-    )
-    c, op = closes.alias("c"), opens.alias("op")
     okc = F.col("c.l_orderkey")
     tr = (
-        c.join(op, F.col("op.l_orderkey") == F.col("c.l_orderkey"))
-        .join(
-            o.filter(F.col("o_orderstatus") == "F"),
-            F.col("o_orderkey") == F.col("c.l_orderkey"),
-        )
-        .filter((F.col("oq") > 0) & (F.col("cq") > 0))
+        _closed_trades(spark, sf_dir)
         .select(
             okc.alias("orderkey"),
             F.when(
@@ -5133,35 +5012,8 @@ def nav_reallocation_application(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: one ticker-grain aggregate over the closed-trade frame; the
     gate channels are hash columns; sleeve rollups are bounded."""
-    li = load_table(spark, sf_dir, "lineitem")
-    o = load_table(spark, sf_dir, "orders")
-    net = F.col("l_extendedprice") * (1 - F.col("l_discount"))
-    mx = li.groupBy("l_orderkey").agg(F.max("l_linenumber").alias("maxline"))
-    closes = (
-        li.join(
-            mx,
-            (li.l_orderkey == mx.l_orderkey)
-            & (li.l_linenumber == mx.maxline),
-        )
-        .drop(mx.l_orderkey)
-        .groupBy("l_orderkey")
-        .agg(F.sum("l_quantity").alias("cq"), F.sum(net).alias("cnet"))
-    )
-    opens = (
-        li.filter(
-            (F.col("l_linenumber") == 1) & (F.col("l_returnflag") != "R")
-        )
-        .groupBy("l_orderkey")
-        .agg(F.sum("l_quantity").alias("oq"), F.sum(net).alias("onet"))
-    )
-    c, op = closes.alias("c"), opens.alias("op")
     trades = (
-        c.join(op, F.col("op.l_orderkey") == F.col("c.l_orderkey"))
-        .join(
-            o.filter(F.col("o_orderstatus") == "F"),
-            F.col("o_orderkey") == F.col("c.l_orderkey"),
-        )
-        .filter((F.col("oq") > 0) & (F.col("cq") > 0))
+        _closed_trades(spark, sf_dir)
         .select(
             (F.col("o_custkey") % 25).alias("bucket"),
             F.concat(
@@ -8306,25 +8158,8 @@ def forecast_bundle_rescaling(spark: SparkSession, sf_dir: str) -> DataFrame:
     global sort); the per-(ticker, model) median runs over exactly the
     horizon set (bounded 5 rows per group); latest_close is a
     per-ticker rank-1 window."""
-    li = load_table(spark, sf_dir, "lineitem")
     o = load_table(spark, sf_dir, "orders")
-    net = F.col("l_extendedprice").cast("decimal(18,2)") * (
-        F.lit(1) - F.col("l_discount")
-    ).cast("decimal(5,2)")
-    mx = li.groupBy("l_orderkey").agg(F.max("l_linenumber").alias("maxline"))
-    closes = (
-        li.join(
-            mx,
-            (li.l_orderkey == mx.l_orderkey) & (li.l_linenumber == mx.maxline),
-        )
-        .drop(mx.l_orderkey)
-        .groupBy("l_orderkey")
-        .agg(
-            F.sum("l_quantity").alias("cq"),
-            F.sum(net).alias("cnet"),
-            F.max("l_shipdate").alias("cship"),
-        )
-    )
+    closes, _ = _trade_legs(spark, sf_dir, decimal_net=True)
     px = (
         closes.join(o, F.col("o_orderkey") == F.col("l_orderkey"))
         .filter((F.col("o_orderstatus") == "F") & (F.col("cq") > 0))
@@ -10275,7 +10110,7 @@ def compaction_plan_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     Reference anchor: the retention/cleanup maintenance shape of
     etl/data_storage.py:150-176 applied to layout upkeep rather than
     deletion."""
-    from .queries import stage_for_oracle
+    from .queries import stage_cached
 
     root = _ensure_partitioned_events(spark, sf_dir)
     inv = (
@@ -10288,8 +10123,7 @@ def compaction_plan_census(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("length").cast("long").alias("bytes"),
         )
     )
-    staged_glob = stage_for_oracle(inv, "events_file_inventory", sf_dir)
-    staged = spark.read.parquet(staged_glob)
+    staged = stage_cached(spark, sf_dir, "events_file_inventory", lambda: inv)
     w = (
         Window.partitionBy("part")
         .orderBy(F.col("bytes").desc(), "file")

@@ -125,32 +125,9 @@ def round_trips(spark: SparkSession, sf_dir: str) -> DataFrame:
     number (summed), open lot = all unflagged line-1 legs (summed) —
     deterministic under ties, which row_number/ANY_VALUE are not
     (SURVEY §7.3 item 2: determinism for the oracle)."""
-    li = load_table(spark, sf_dir, "lineitem").filter(F.col("l_orderkey") < 3000)
-    net = F.col("l_extendedprice") * (1 - F.col("l_discount"))
-    mx = li.groupBy("l_orderkey").agg(F.max("l_linenumber").alias("maxline"))
-    closes = (
-        li.join(
-            mx,
-            (li.l_orderkey == mx.l_orderkey) & (li.l_linenumber == mx.maxline),
-        )
-        .drop(mx.l_orderkey)
-        .groupBy("l_orderkey")
-        .agg(
-            F.sum("l_quantity").alias("cq"),
-            F.sum(net).alias("cnet"),
-            F.max("l_shipdate").alias("cship"),
-        )
-    )
-    opens = (
-        li.filter((F.col("l_linenumber") == 1) & (F.col("l_returnflag") != "R"))
-        .groupBy("l_orderkey")
-        .agg(
-            F.sum("l_quantity").alias("oq"),
-            F.sum(net).alias("onet"),
-            F.min("l_shipdate").alias("oship"),
-        )
-    )
-    c, o = closes.alias("c"), opens.alias("o")
+    closes, opens = _trade_legs(spark, sf_dir)
+    cut = F.col("l_orderkey") < 3000
+    c, o = closes.filter(cut).alias("c"), opens.filter(cut).alias("o")
     return c.join(o, F.col("o.l_orderkey") == F.col("c.l_orderkey"), "left").select(
         F.col("c.l_orderkey").alias("orderkey"),
         r6(F.col("cq")).alias("close_qty"),
@@ -1468,10 +1445,10 @@ def exit_quality_breakdown(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def canonical_legs_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The canonical closed round-trip superset — one row per
-    'F'-status order with both legs (open line 1 non-returned, close =
-    max linenumber), carrying every column the report family projects:
-    close aggregates (cq/cnet/cship/ctax/bar extremes), open aggregates
+    """The canonical closed round-trip superset — a projection of
+    ``_closed_trades`` (one row per 'F'-status order with both legs)
+    onto every column the report family reads: close aggregates
+    (cq/cnet/cship/ctax/bar extremes), open aggregates
     (oq/onet/oship/ostatus), and the order dims (sid/ticker/priority).
 
     Materialized ONCE per (Spark application, sf_dir) through the shared
@@ -1493,9 +1470,41 @@ def canonical_legs_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _build_canonical_legs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    sid = F.col("o_custkey") % 25
+    return _closed_trades(spark, sf_dir).select(
+        F.col("c.l_orderkey").alias("orderkey"),
+        sid.alias("sid"),
+        F.concat(F.lit("T"), sid.cast("string")).alias("ticker"),
+        "o_orderpriority",
+        "cq", "cnet", "cship", "ctax", "bar_high", "bar_low",
+        "oq", "onet", "oship", "ostatus",
+    )
+
+
+def _trade_legs(
+    spark: SparkSession, sf_dir: str, decimal_net: bool = False
+) -> tuple[DataFrame, DataFrame]:
+    """The two lots of every round trip, each keyed by ``l_orderkey`` —
+    the close and open sides of the reference's round_trips view
+    (`etl/database_manager.py:1404-1425`; see `round_trips`).
+
+    Line numbers are not unique within an order, so both are AGGREGATED
+    lots: ``closes`` sums all legs at the max line number (cq, cnet,
+    cship, close_d = to_date(cship), ctax, bar_high, bar_low);
+    ``opens`` sums the unflagged line-1 legs (oq, onet, oship,
+    ostatus). Consumers read a subset; Catalyst's column pruning drops
+    the aggregates they never read, so each plan is the one a
+    hand-written subset would give. ``decimal_net`` sums the net in
+    decimal(18,2) x decimal(5,2) instead of double, for callers whose
+    price quotients must be bit-identical to the oracle's DECIMAL sums
+    (SURVEY §7.3 item 6)."""
     li = load_table(spark, sf_dir, "lineitem")
-    o = load_table(spark, sf_dir, "orders")
-    net = F.col("l_extendedprice") * (1 - F.col("l_discount"))
+    if decimal_net:
+        net = F.col("l_extendedprice").cast("decimal(18,2)") * (
+            F.lit(1) - F.col("l_discount")
+        ).cast("decimal(5,2)")
+    else:
+        net = F.col("l_extendedprice") * (1 - F.col("l_discount"))
     mx = li.groupBy("l_orderkey").agg(F.max("l_linenumber").alias("maxline"))
     closes = (
         li.join(
@@ -1508,6 +1517,7 @@ def _build_canonical_legs(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("l_quantity").alias("cq"),
             F.sum(net).alias("cnet"),
             F.max("l_shipdate").alias("cship"),
+            F.to_date(F.max("l_shipdate")).alias("close_d"),
             F.min("l_tax").alias("ctax"),
             F.max(F.col("l_extendedprice") / F.col("l_quantity")).alias(
                 "bar_high"
@@ -1527,25 +1537,27 @@ def _build_canonical_legs(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.max("l_linestatus").alias("ostatus"),
         )
     )
+    return closes, opens
+
+
+def _closed_trades(
+    spark: SparkSession, sf_dir: str, decimal_net: bool = False
+) -> DataFrame:
+    """Closed round trips: the ``_trade_legs`` close lot ("c") inner
+    joined to its open lot ("op") and to the 'F'-status order, with both
+    lots non-empty (oq > 0 AND cq > 0). The ``c`` / ``op`` qualifiers
+    stay visible, so consumers read ``F.col("c.l_orderkey")``."""
+    closes, opens = _trade_legs(spark, sf_dir, decimal_net)
+    o = load_table(spark, sf_dir, "orders")
     c, op = closes.alias("c"), opens.alias("op")
-    sid = F.col("o_custkey") % 25
-    legs = (
+    return (
         c.join(op, F.col("op.l_orderkey") == F.col("c.l_orderkey"))
         .join(
             o.filter(F.col("o_orderstatus") == "F"),
             F.col("o_orderkey") == F.col("c.l_orderkey"),
         )
         .filter((F.col("oq") > 0) & (F.col("cq") > 0))
-        .select(
-            F.col("c.l_orderkey").alias("orderkey"),
-            sid.alias("sid"),
-            F.concat(F.lit("T"), sid.cast("string")).alias("ticker"),
-            "o_orderpriority",
-            "cq", "cnet", "cship", "ctax", "bar_high", "bar_low",
-            "oq", "onet", "oship", "ostatus",
-        )
     )
-    return legs
 
 
 @session_frame_cache
@@ -2480,40 +2492,8 @@ def capital_utilization_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-trade edge scaled to 0.95 and 1.40 trades/day). The confirmed
     capital base is the engine's pinned 1e6 (the reference reads
     portfolio_cash_state). Single bounded fleet aggregation."""
-    li = load_table(spark, sf_dir, "lineitem")
-    o = load_table(spark, sf_dir, "orders")
-    net = F.col("l_extendedprice") * (1 - F.col("l_discount"))
-    mx = li.groupBy("l_orderkey").agg(F.max("l_linenumber").alias("maxline"))
-    closes = (
-        li.join(
-            mx,
-            (li.l_orderkey == mx.l_orderkey) & (li.l_linenumber == mx.maxline),
-        )
-        .drop(mx.l_orderkey)
-        .groupBy("l_orderkey")
-        .agg(
-            F.sum("l_quantity").alias("cq"),
-            F.sum(net).alias("cnet"),
-            F.max("l_shipdate").alias("cship"),
-        )
-    )
-    opens = (
-        li.filter((F.col("l_linenumber") == 1) & (F.col("l_returnflag") != "R"))
-        .groupBy("l_orderkey")
-        .agg(
-            F.sum("l_quantity").alias("oq"),
-            F.sum(net).alias("onet"),
-            F.min("l_shipdate").alias("oship"),
-        )
-    )
-    c, op = closes.alias("c"), opens.alias("op")
     trips = (
-        c.join(op, F.col("op.l_orderkey") == F.col("c.l_orderkey"))
-        .join(
-            o.filter(F.col("o_orderstatus") == "F"),
-            F.col("o_orderkey") == F.col("c.l_orderkey"),
-        )
-        .filter((F.col("oq") > 0) & (F.col("cq") > 0))
+        _closed_trades(spark, sf_dir)
         .select(
             F.col("onet").alias("notional"),
             F.round(F.col("cnet") - F.col("onet"), 6).alias("pnl"),
@@ -3251,34 +3231,8 @@ def profitability_proof_validation(
     single-row aggregates cross-joined. No UDF, no collect."""
     li = load_table(spark, sf_dir, "lineitem")
     o = load_table(spark, sf_dir, "orders")
-    net = F.col("l_extendedprice") * (1 - F.col("l_discount"))
-    mx = li.groupBy("l_orderkey").agg(F.max("l_linenumber").alias("maxline"))
-    closes = (
-        li.join(
-            mx,
-            (li.l_orderkey == mx.l_orderkey) & (li.l_linenumber == mx.maxline),
-        )
-        .drop(mx.l_orderkey)
-        .groupBy("l_orderkey")
-        .agg(
-            F.sum("l_quantity").alias("cq"),
-            F.sum(net).alias("cnet"),
-            F.max("l_shipdate").alias("cship"),
-        )
-    )
-    opens = (
-        li.filter((F.col("l_linenumber") == 1) & (F.col("l_returnflag") != "R"))
-        .groupBy("l_orderkey")
-        .agg(F.sum("l_quantity").alias("oq"), F.sum(net).alias("onet"))
-    )
-    c, op = closes.alias("c"), opens.alias("op")
     trades = (
-        c.join(op, F.col("op.l_orderkey") == F.col("c.l_orderkey"))
-        .join(
-            o.filter(F.col("o_orderstatus") == "F"),
-            F.col("o_orderkey") == F.col("c.l_orderkey"),
-        )
-        .filter((F.col("oq") > 0) & (F.col("cq") > 0))
+        _closed_trades(spark, sf_dir)
         .select(
             F.concat(F.lit("T"), (F.col("o_custkey") % 25).cast("string")).alias(
                 "ticker"
@@ -3862,31 +3816,8 @@ def ts_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.max("l_shipdate").cast("date").alias("close_d")
     )
     # _sleeve_trades_frame drops orderkey; rebuild with it
-    o = load_table(spark, sf_dir, "orders")
-    net = F.col("l_extendedprice") * (1 - F.col("l_discount"))
-    mx = li.groupBy("l_orderkey").agg(F.max("l_linenumber").alias("maxline"))
-    closes = (
-        li.join(
-            mx,
-            (li.l_orderkey == mx.l_orderkey) & (li.l_linenumber == mx.maxline),
-        )
-        .drop(mx.l_orderkey)
-        .groupBy("l_orderkey")
-        .agg(F.sum("l_quantity").alias("cq"), F.sum(net).alias("cnet"))
-    )
-    opens = (
-        li.filter((F.col("l_linenumber") == 1) & (F.col("l_returnflag") != "R"))
-        .groupBy("l_orderkey")
-        .agg(F.sum("l_quantity").alias("oq"), F.sum(net).alias("onet"))
-    )
-    c, op = closes.alias("c"), opens.alias("op")
     tr2 = (
-        c.join(op, F.col("op.l_orderkey") == F.col("c.l_orderkey"))
-        .join(
-            o.filter(F.col("o_orderstatus") == "F"),
-            F.col("o_orderkey") == F.col("c.l_orderkey"),
-        )
-        .filter((F.col("oq") > 0) & (F.col("cq") > 0))
+        _closed_trades(spark, sf_dir)
         .join(cship, F.col("c.l_orderkey") == cship.l_orderkey)
         .select(
             F.concat(F.lit("T"), (F.col("o_custkey") % 25).cast("string")).alias(
@@ -3894,7 +3825,7 @@ def ts_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
             F.col("c.l_orderkey").alias("orderkey"),
             F.round(F.col("cnet") - F.col("onet"), 6).alias("pnl"),
-            "close_d",
+            cship["close_d"],
             (
                 0.5
                 + hash_unit_interval(F.lit("conf"), F.col("c.l_orderkey")) / 2
@@ -4110,36 +4041,8 @@ def quant_validation_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: one (ticker, day) groupBy + one per-ticker median
     aggregation. No UDF."""
-    li = load_table(spark, sf_dir, "lineitem")
-    o = load_table(spark, sf_dir, "orders")
-    net = F.col("l_extendedprice") * (1 - F.col("l_discount"))
-    mx = li.groupBy("l_orderkey").agg(F.max("l_linenumber").alias("maxline"))
-    closes = (
-        li.join(
-            mx,
-            (li.l_orderkey == mx.l_orderkey) & (li.l_linenumber == mx.maxline),
-        )
-        .drop(mx.l_orderkey)
-        .groupBy("l_orderkey")
-        .agg(
-            F.sum("l_quantity").alias("cq"),
-            F.sum(net).alias("cnet"),
-            F.max("l_shipdate").cast("date").alias("close_d"),
-        )
-    )
-    opens = (
-        li.filter((F.col("l_linenumber") == 1) & (F.col("l_returnflag") != "R"))
-        .groupBy("l_orderkey")
-        .agg(F.sum("l_quantity").alias("oq"), F.sum(net).alias("onet"))
-    )
-    c, op = closes.alias("c"), opens.alias("op")
     trades = (
-        c.join(op, F.col("op.l_orderkey") == F.col("c.l_orderkey"))
-        .join(
-            o.filter(F.col("o_orderstatus") == "F"),
-            F.col("o_orderkey") == F.col("c.l_orderkey"),
-        )
-        .filter((F.col("oq") > 0) & (F.col("cq") > 0))
+        _closed_trades(spark, sf_dir)
         .select(
             F.concat(F.lit("T"), (F.col("o_custkey") % 25).cast("string")).alias(
                 "ticker"
@@ -4378,37 +4281,9 @@ def barbell_pnl_evaluation(spark: SparkSession, sf_dir: str) -> DataFrame:
     windows over the bounded TRADE grain, not raw rows) — the same
     ledger class as the oracle-checked paper-trading replay; everything
     else is bounded aggregation. No UDF."""
-    li = load_table(spark, sf_dir, "lineitem")
-    o = load_table(spark, sf_dir, "orders")
-    net = F.col("l_extendedprice") * (1 - F.col("l_discount"))
-    mx = li.groupBy("l_orderkey").agg(F.max("l_linenumber").alias("maxline"))
-    closes = (
-        li.join(
-            mx,
-            (li.l_orderkey == mx.l_orderkey) & (li.l_linenumber == mx.maxline),
-        )
-        .drop(mx.l_orderkey)
-        .groupBy("l_orderkey")
-        .agg(
-            F.sum("l_quantity").alias("cq"),
-            F.sum(net).alias("cnet"),
-            F.max("l_shipdate").cast("date").alias("close_d"),
-        )
-    )
-    opens = (
-        li.filter((F.col("l_linenumber") == 1) & (F.col("l_returnflag") != "R"))
-        .groupBy("l_orderkey")
-        .agg(F.sum("l_quantity").alias("oq"), F.sum(net).alias("onet"))
-    )
-    c, op = closes.alias("c"), opens.alias("op")
     sid = F.col("o_custkey") % 25
     tr3 = (
-        c.join(op, F.col("op.l_orderkey") == F.col("c.l_orderkey"))
-        .join(
-            o.filter(F.col("o_orderstatus") == "F"),
-            F.col("o_orderkey") == F.col("c.l_orderkey"),
-        )
-        .filter((F.col("oq") > 0) & (F.col("cq") > 0))
+        _closed_trades(spark, sf_dir)
         .select(
             F.concat(F.lit("T"), sid.cast("string")).alias("ticker"),
             F.col("c.l_orderkey").alias("orderkey"),
@@ -4787,38 +4662,7 @@ _OLA_SQL = """
 @session_frame_cache
 def _ola_recf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Shared attribution record frame (the ``recf`` CTE of `_OLA_SQL`)."""
-    li = load_table(spark, sf_dir, "lineitem")
     o = load_table(spark, sf_dir, "orders")
-    # decimal-exact net so the exposed price quotients are bit-identical
-    # to the oracle (SURVEY §7.3 item 6: money sums in DECIMAL)
-    net = F.col("l_extendedprice").cast("decimal(18,2)") * (
-        F.lit(1) - F.col("l_discount")
-    ).cast("decimal(5,2)")
-    mx = li.groupBy("l_orderkey").agg(F.max("l_linenumber").alias("maxline"))
-    closes = (
-        li.join(
-            mx,
-            (li.l_orderkey == mx.l_orderkey) & (li.l_linenumber == mx.maxline),
-        )
-        .drop(mx.l_orderkey)
-        .groupBy("l_orderkey")
-        .agg(
-            F.sum("l_quantity").alias("cq"),
-            F.sum(net).alias("cnet"),
-            F.max("l_shipdate").alias("cship"),
-            F.min("l_tax").alias("ctax"),
-        )
-    )
-    opens = (
-        li.filter((F.col("l_linenumber") == 1) & (F.col("l_returnflag") != "R"))
-        .groupBy("l_orderkey")
-        .agg(
-            F.sum("l_quantity").alias("oq"),
-            F.sum(net).alias("onet"),
-            F.min("l_shipdate").alias("oship"),
-            F.max("l_linestatus").alias("ostatus"),
-        )
-    )
     audit = o.filter(F.col("o_orderkey") % 4 == 0).select(
         F.concat(F.lit("ts_"), F.col("o_orderkey").cast("string")).alias(
             "aud_id"
@@ -4851,15 +4695,11 @@ def _ola_recf(spark: SparkSession, sf_dir: str) -> DataFrame:
             r6((F.col("o_orderkey") % 41 - 20).cast("double") / 205),
         ).alias("expected_return"),
     )
-    c, op = closes.alias("c"), opens.alias("op")
     key = F.col("c.l_orderkey")
     rawt = (
-        c.join(op, F.col("op.l_orderkey") == F.col("c.l_orderkey"))
-        .join(
-            o.filter(F.col("o_orderstatus") == "F"),
-            F.col("o_orderkey") == F.col("c.l_orderkey"),
-        )
-        .filter((F.col("oq") > 0) & (F.col("cq") > 0))
+        # decimal-exact net so the exposed price quotients are bit-identical
+        # to the oracle (SURVEY §7.3 item 6: money sums in DECIMAL)
+        _closed_trades(spark, sf_dir, decimal_net=True)
         .select(
             key.alias("close_id"),
             F.concat(F.lit("T"), (F.col("o_custkey") % 25).cast("string"))
@@ -5751,45 +5591,9 @@ def _tcu_healthy(spark: SparkSession, sf_dir: str) -> DataFrame:
 @session_frame_cache
 def _tcu_trades(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Curation trade source frame (the ``ctr`` CTE of `_TCU_SQL`)."""
-    li = load_table(spark, sf_dir, "lineitem")
-    o = load_table(spark, sf_dir, "orders")
-    net = F.col("l_extendedprice").cast("decimal(18,2)") * (
-        F.lit(1) - F.col("l_discount")
-    ).cast("decimal(5,2)")
-    mx = li.groupBy("l_orderkey").agg(F.max("l_linenumber").alias("maxline"))
-    closes = (
-        li.join(
-            mx,
-            (li.l_orderkey == mx.l_orderkey) & (li.l_linenumber == mx.maxline),
-        )
-        .drop(mx.l_orderkey)
-        .groupBy("l_orderkey")
-        .agg(
-            F.sum("l_quantity").alias("cq"),
-            F.sum(net).alias("cnet"),
-            F.max("l_shipdate").alias("cship"),
-            F.min("l_tax").alias("ctax"),
-        )
-    )
-    opens = (
-        li.filter((F.col("l_linenumber") == 1) & (F.col("l_returnflag") != "R"))
-        .groupBy("l_orderkey")
-        .agg(
-            F.sum("l_quantity").alias("oq"),
-            F.sum(net).alias("onet"),
-            F.min("l_shipdate").alias("oship"),
-            F.max("l_linestatus").alias("ostatus"),
-        )
-    )
-    c, op = closes.alias("c"), opens.alias("op")
     key = F.col("c.l_orderkey")
     return (
-        c.join(op, F.col("op.l_orderkey") == F.col("c.l_orderkey"))
-        .join(
-            o.filter(F.col("o_orderstatus") == "F"),
-            F.col("o_orderkey") == F.col("c.l_orderkey"),
-        )
-        .filter((F.col("oq") > 0) & (F.col("cq") > 0))
+        _closed_trades(spark, sf_dir, decimal_net=True)
         .select(
             key.alias("id"),
             F.concat(F.lit("T"), (F.col("o_custkey") % 25).cast("string"))
@@ -6596,34 +6400,9 @@ def trade_event_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """R152: the dashboard's bounded trade-event feed — ENTRY rows from
     opening legs, SELL exits classified by round-trip PnL, most-recent-50
     by ship date (TakeOrderedAndProject; bounded at any scale)."""
-    li = load_table(spark, sf_dir, "lineitem").filter(
-        F.col("l_orderkey") < 3000
-    )
-    net = F.col("l_extendedprice") * (1 - F.col("l_discount"))
-    mx = li.groupBy("l_orderkey").agg(F.max("l_linenumber").alias("maxline"))
-    closes = (
-        li.join(
-            mx,
-            (li["l_orderkey"] == mx["l_orderkey"])
-            & (li["l_linenumber"] == mx["maxline"]),
-        )
-        .drop(mx["l_orderkey"])
-        .groupBy("l_orderkey")
-        .agg(
-            F.sum(net).alias("cnet"),
-            F.max("l_shipdate").alias("cship"),
-        )
-    )
-    opens = (
-        li.filter(
-            (F.col("l_linenumber") == 1) & (F.col("l_returnflag") != "R")
-        )
-        .groupBy("l_orderkey")
-        .agg(
-            F.sum(net).alias("onet"),
-            F.min("l_shipdate").alias("oship"),
-        )
-    )
+    closes, opens = _trade_legs(spark, sf_dir)
+    cut = F.col("l_orderkey") < 3000
+    closes, opens = closes.filter(cut), opens.filter(cut)
     entries = opens.join(
         closes.select("l_orderkey"), "l_orderkey"
     ).select(

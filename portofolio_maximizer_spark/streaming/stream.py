@@ -304,6 +304,9 @@ def drain_session(spark, partitions: int = 8, state_provider: str | None = None)
     engine-side proof (rocksdb custom metrics in the progress events)."""
     child = spark.newSession()
     child.conf.set("spark.sql.shuffle.partitions", str(partitions))
+    # newSession() drops the parent's runtime confs; keep the one Python
+    # worker pool that ``load_table`` sets on a vanilla parent session.
+    child.conf.set("spark.sql.execution.pyspark.udf.simplifiedTraceback.enabled", "false")
     if state_provider == "rocksdb":
         child.conf.set(
             "spark.sql.streaming.stateStore.providerClass", ROCKSDB_PROVIDER

@@ -1,4 +1,4 @@
-"""One owner per staged artifact.
+"""One owner per staged artifact, and one closed-trade leg derivation.
 
 ``stage_cached`` keys an artifact on (name, package hash, data
 fingerprint) only, so two calls that stage the same name with their own
@@ -6,6 +6,10 @@ build lambdas would let whichever query runs first decide what every
 consumer reads. Each name therefore has exactly one staging call in the
 package, inside the pack's builder function, and every consumer calls
 that builder.
+
+The same rule holds for the round-trip lots: the max-line close lot and
+the line-1 open lot are derived once, in ``queries_trades._trade_legs``,
+and consumers call it or ``_closed_trades``.
 """
 
 from __future__ import annotations
@@ -41,37 +45,40 @@ def _name_arg(node: ast.Call, pos: int) -> ast.expr | None:
     return node.args[pos] if len(node.args) > pos else None
 
 
+def _package_files():
+    for dirpath, dirs, files in os.walk(PKG):
+        dirs[:] = [d for d in dirs if d != "__pycache__"]
+        for fn in sorted(files):
+            if fn.endswith(".py"):
+                yield os.path.join(dirpath, fn)
+
+
 def _staging_calls() -> tuple[dict[str, list[str]], list[str]]:
     """Literal artifact name -> call sites, and the sites whose name is
     not a string literal. Calls inside the staging functions' own
     definitions in ``plans/queries.py`` are the protocol, not owners."""
     owners: dict[str, list[str]] = defaultdict(list)
     dynamic: list[str] = []
-    for dirpath, dirs, files in os.walk(PKG):
-        dirs[:] = [d for d in dirs if d != "__pycache__"]
-        for fn in sorted(files):
-            if not fn.endswith(".py"):
+    for path in _package_files():
+        with open(path) as f:
+            tree = ast.parse(f.read(), path)
+        skip: set[int] = set()
+        if path == QUERIES_PY:
+            for d in tree.body:
+                if isinstance(d, ast.FunctionDef) and d.name in STAGERS:
+                    skip |= {id(n) for n in ast.walk(d)}
+        for node in ast.walk(tree):
+            if not isinstance(node, ast.Call) or id(node) in skip:
                 continue
-            path = os.path.join(dirpath, fn)
-            with open(path) as f:
-                tree = ast.parse(f.read(), path)
-            skip: set[int] = set()
-            if path == QUERIES_PY:
-                for d in tree.body:
-                    if isinstance(d, ast.FunctionDef) and d.name in STAGERS:
-                        skip |= {id(n) for n in ast.walk(d)}
-            for node in ast.walk(tree):
-                if not isinstance(node, ast.Call) or id(node) in skip:
-                    continue
-                callee = _callee(node)
-                if callee not in STAGERS:
-                    continue
-                site = f"{os.path.relpath(path, PKG)}:{node.lineno}"
-                arg = _name_arg(node, STAGERS[callee])
-                if isinstance(arg, ast.Constant) and isinstance(arg.value, str):
-                    owners[arg.value].append(site)
-                else:
-                    dynamic.append(site)
+            callee = _callee(node)
+            if callee not in STAGERS:
+                continue
+            site = f"{os.path.relpath(path, PKG)}:{node.lineno}"
+            arg = _name_arg(node, STAGERS[callee])
+            if isinstance(arg, ast.Constant) and isinstance(arg.value, str):
+                owners[arg.value].append(site)
+            else:
+                dynamic.append(site)
     return owners, dynamic
 
 
@@ -96,3 +103,37 @@ def test_oracle_reads_only_staged_artifacts():
         read |= set(re.findall(re.escape(STAGE_TOKEN) + r"/(\w+)", sql))
     assert read, "no oracle reads a staged artifact: the pattern is stale"
     assert read - set(owners) == set()
+
+
+#: the max-line grouping that defines a close lot
+MAXLINE = 'agg(F.max("l_linenumber").alias("maxline"))'
+
+#: functions allowed to spell it: the owner, plus three variants that are
+#: not the lot pair (a distinct-key census, a decimal(28,8) net cast back
+#: to double, and a leg-grain census)
+MAXLINE_OWNERS = [
+    "_trade_legs",
+    "check_constraint_validation",
+    "open_trade_liquidation_plan",
+    "platt_contract_audit",
+]
+
+
+def test_close_lot_is_derived_in_one_place():
+    sites = []
+    for path in _package_files():
+        with open(path) as f:
+            src = f.read()
+        if MAXLINE not in src:
+            continue
+        funcs = [
+            n for n in ast.walk(ast.parse(src, path)) if isinstance(n, ast.FunctionDef)
+        ]
+        for lineno, line in enumerate(src.splitlines(), 1):
+            if MAXLINE in line:
+                inner = [f for f in funcs if f.lineno <= lineno <= f.end_lineno]
+                sites.append(max(inner, key=lambda f: f.lineno).name if inner else path)
+    assert sorted(sites) == MAXLINE_OWNERS, (
+        "close lots derived outside _trade_legs; call _trade_legs or "
+        f"_closed_trades instead: {sorted(sites)}"
+    )

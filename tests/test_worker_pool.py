@@ -20,8 +20,10 @@ def test_rdd_and_grouped_fit_share_one_daemon(sf_dir):
     """A fresh session (a separate process, so no other test's workers are
     counted) runs an RDD Python action and then a grouped fit; the driver
     JVM must have one ``pyspark.daemon`` child, not one per path. Checked
-    on the tuned factory and on a plain vanilla session, which gets the
-    conf from its first source-table read."""
+    on the tuned factory, on a plain vanilla session, which gets the
+    conf from its first source-table read, and on a streaming drain's
+    child of that vanilla session, which ``newSession()`` builds without
+    the parent's runtime confs."""
     sessions = {
         "tuned": """
 from portofolio_maximizer_spark.session import get_spark
@@ -32,6 +34,14 @@ from pyspark.sql import SparkSession
 from portofolio_maximizer_spark.sources.catalog import load_table
 spark = SparkSession.builder.master("local[2]").getOrCreate()
 load_table(spark, {sf_dir!r}, "region")
+""",
+        "drain": f"""
+from pyspark.sql import SparkSession
+from portofolio_maximizer_spark.sources.catalog import load_table
+from portofolio_maximizer_spark.streaming.stream import drain_session
+spark = SparkSession.builder.master("local[2]").getOrCreate()
+load_table(spark, {sf_dir!r}, "region")
+spark = drain_session(spark)
 """,
     }
     for case, session in sessions.items():

@@ -13,6 +13,12 @@ queries left out (not named on the command line, or without an oracle),
 listed by name when there are at most 10. An unknown query name is an
 error.
 
+Each status line ends with two peak-RSS high-water marks, in MB, taken
+after the query ran: ``py`` is this process (``ru_maxrss``; DuckDB and
+the pandas frames live here) and ``jvm`` is the Spark driver JVM
+(``VmHWM`` in ``/proc/<pid>/status``). Both only grow, so the query whose
+line shows the jump is the one that set the mark.
+
 ``--strict`` mirrors the driver's dtype-sensitive exact value hash: a
 DuckDB HUGEINT (materialized float64, ``216.0``) vs a Spark BIGINT
 (``216``) is a FAIL even when numerically equal, and float columns must
@@ -22,6 +28,7 @@ match bit-exactly (no 1e-6 tolerance).
 from __future__ import annotations
 
 import os
+import resource
 import sys
 import time
 
@@ -100,6 +107,14 @@ def compare(spark_df: pd.DataFrame, duck_df: pd.DataFrame, strict: bool = False)
     return issues
 
 
+def peak_rss(jvm_pid: int) -> str:
+    """Peak RSS so far of this process and of the driver JVM, in MB."""
+    py_mb = resource.getrusage(resource.RUSAGE_SELF).ru_maxrss // 1024  # KB on Linux
+    with open(f"/proc/{jvm_pid}/status") as f:
+        hwm_kb = next(int(line.split()[1]) for line in f if line.startswith("VmHWM:"))
+    return f"rss py {py_mb} MB, jvm {hwm_kb // 1024} MB"
+
+
 def main() -> int:
     argv = [a for a in sys.argv[1:] if a != "--strict"]
     strict = "--strict" in sys.argv[1:]
@@ -116,6 +131,7 @@ def main() -> int:
         print(f"unknown queries: {', '.join(unknown)}")
         return 1
     spark = get_spark("diffcheck")
+    jvm_pid = spark._jvm.java.lang.ProcessHandle.current().pid()
     # render the staged-oracle path templates for THIS sf_dir (the driver
     # contract's oracle_sql() renders for its fixed sf0.01 run)
     oracles = {k: render_oracle(v, sf_dir) for k, v in ORACLE.items()}
@@ -129,22 +145,25 @@ def main() -> int:
         try:
             sdf = fn(spark, sf_dir).toPandas()
         except Exception as e:  # noqa: BLE001
-            print(f"FAIL  {name}: spark error: {e}")
+            print(f"FAIL  {name}: spark error: {e} [{peak_rss(jvm_pid)}]")
             failed.append(name)
             continue
         if name not in oracles:
-            print(f"ROWS  {name}: {len(sdf)} rows (no oracle) [{time.time()-t0:.1f}s]")
+            print(
+                f"ROWS  {name}: {len(sdf)} rows (no oracle)"
+                f" [{time.time()-t0:.1f}s, {peak_rss(jvm_pid)}]"
+            )
             skipped.append(name)
             continue
         try:
             ddf = con.sql(oracles[name]).df()
         except Exception as e:  # noqa: BLE001
-            print(f"FAIL  {name}: duckdb error: {e}")
+            print(f"FAIL  {name}: duckdb error: {e} [{peak_rss(jvm_pid)}]")
             failed.append(name)
             continue
         issues = compare(sdf, ddf, strict=strict)
         status = "OK" if not issues else "FAIL"
-        print(f"{status:5} {name}: {len(sdf)} rows [{time.time()-t0:.1f}s]")
+        print(f"{status:5} {name}: {len(sdf)} rows [{time.time()-t0:.1f}s, {peak_rss(jvm_pid)}]")
         for msg in issues:
             print(f"      - {msg}")
         if issues:

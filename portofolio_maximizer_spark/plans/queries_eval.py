@@ -4159,20 +4159,16 @@ def capital_readiness_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     # R3 + R6 — production round-trips with lifecycle dates
     li = load_table(spark, sf_dir, "lineitem")
     o = load_table(spark, sf_dir, "orders")
-    pcloses, popens = _trade_legs(spark, sf_dir)
     of = o.filter(F.col("o_orderstatus") == "F")
-    # R3 and the R6 orphan census share one closes-side pass
-    # (optimization round 13, guide §2.4): the previous inner-join ptr +
-    # separate anti-join re-embedded the lineitem maxline/opens subtrees
-    # twice. One LEFT join against the oq>0 opens classifies each close
-    # as trade (matched, cq>0 — the old inner-join row set) or orphan
-    # (no qualifying open — the old anti-join row set); both aggregates
-    # become when()-guarded columns of a single pass with identical
-    # per-row values.
-    j6 = pcloses.join(of, F.col("o_orderkey") == F.col("l_orderkey")).join(
-        popens.filter(F.col("oq") > 0), "l_orderkey", "left"
+    # R3 and the R6 orphan census share one pass over the one-pass lot
+    # frame: each 'F' order's lots classify it as a trade (opened with
+    # oq > 0, and cq > 0) or an orphan close (no open lot with oq > 0);
+    # both aggregates are when()-guarded columns of a single fold.
+    j6 = _trade_legs(spark, sf_dir).join(
+        of, F.col("o_orderkey") == F.col("l_orderkey")
     )
-    matched = F.col("oq").isNotNull() & (F.col("cq") > 0)
+    opened = F.coalesce(F.col("oq") > 0, F.lit(False))
+    matched = opened & (F.col("cq") > 0)
     pnl = F.round(F.col("cnet") - F.col("onet"), 6)
     dec = "decimal(28,6)"
     r3 = j6.agg(
@@ -4203,7 +4199,7 @@ def capital_readiness_check(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .cast("bigint")
         .alias("close_before_entry_count"),
-        F.count(F.when(F.col("oq").isNull(), F.lit(1)))
+        F.count(F.when(~opened, F.lit(1)))
         .cast("bigint")
         .alias("orphan_close_count"),
     )

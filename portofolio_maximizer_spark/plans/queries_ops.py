@@ -4721,8 +4721,11 @@ def error_monitor_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     active days, most-common type (`generate_error_report:469-516`).
     "now" anchors to the stream's newest timestamp.
 
-    Scale: the error channel is a filtered scan; censuses are single
-    folds; the per-day rollup is a bounded (7-day) groupBy."""
+    Scale: the error channel is a filtered scan folded ONCE into a
+    bounded (7 days x 4 types) groupBy that carries the 24h and 1h
+    counts; one census over that fold gives the summary, category and
+    report rows, and the per-day rollup regroups it. No checkpoint, no
+    collect."""
     ev = load_table(spark, sf_dir, "events")
     errs = ev.filter(F.col("event_id") % 50 == 0).select(
         "ts",
@@ -4731,114 +4734,92 @@ def error_monitor_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         .when(F.col("event_id") % 4 == 2, "ConnectionError")
         .otherwise("Other")
         .alias("err_type"),
-    ).localCheckpoint()
+    )
     now = errs.agg(F.max("ts").alias("now"))
-    recent = errs.crossJoin(F.broadcast(now)).filter(
-        F.col("ts") >= F.col("now") - F.expr("INTERVAL 24 HOUR")
-    )
-    census = recent.agg(
-        F.count(F.lit(1)).cast("long").alias("total_errors"),
-        F.sum(
-            F.when(
-                F.col("ts") >= F.col("now") - F.expr("INTERVAL 1 HOUR"), 1
-            ).otherwise(0)
+    # the 24h and 1h windows lie inside the 7-day one
+    days = (
+        errs.crossJoin(F.broadcast(now))
+        .filter(f"ts >= now - INTERVAL {_EMR_REPORT_DAYS} DAY")
+        .groupBy(F.to_date("ts").alias("d"), "err_type")
+        .agg(
+            F.expr("count(1) AS n"),
+            F.expr("count(CASE WHEN ts >= now - INTERVAL 24 HOUR THEN 1 END) AS n24"),
+            F.expr("count(CASE WHEN ts >= now - INTERVAL 1 HOUR THEN 1 END) AS n1"),
         )
-        .cast("long")
-        .alias("errors_last_hour"),
-        *[
-            F.sum(F.when(F.col("err_type") == t, 1).otherwise(0))
-            .cast("long")
-            .alias(a)
-            for t, a in [
-                ("TypeError", "n_type"),
-                ("ValueError", "n_value"),
-                ("ConnectionError", "n_conn"),
-                ("Other", "n_other"),
-            ]
-        ],
-    ).localCheckpoint()
-    alert = (
-        (F.col("errors_last_hour") > _EMR_HOUR_MAX)
-        | (F.col("total_errors") > _EMR_DAY_MAX)
-        | (F.col("n_type") > 0)
-        | (F.col("n_value") > 0)
-        | (F.col("n_conn") > 0)
     )
-    summary = census.select(
-        F.lit("summary").alias("section"),
-        F.lit("last_24h").alias("key"),
-        F.col("total_errors").alias("n"),
-        F.col("errors_last_hour").cast("double").alias("metric"),
-        F.when(alert, "ALERT").otherwise("OK").alias("verdict"),
-    )
-    for t, a in [
+    types = [
         ("TypeError", "n_type"),
         ("ValueError", "n_value"),
         ("ConnectionError", "n_conn"),
-    ]:
-        summary = summary.unionByName(
-            census.select(
-                F.lit("category").alias("section"),
-                F.lit(t).alias("key"),
-                F.col(a).alias("n"),
-                F.lit(None).cast("double").alias("metric"),
-                F.when(F.col(a) > 0, "CRITICAL").alias("verdict"),
+        ("Other", "n_other"),
+    ]
+    # the most common type of the week, ties to the first name: the
+    # least (-count, name) over the four types err_type can take
+    top = ", ".join(
+        f"named_struct('c', -sum(CASE WHEN err_type = '{t}' THEN n ELSE 0 END),"
+        f" 't', '{t}')"
+        for t, _ in types
+    )
+    # the per-type and 1h sums are NULL only when the window is empty,
+    # as a fold over no error rows gives; the totals count, so they are 0
+    census = days.agg(
+        F.expr("coalesce(sum(n24), 0) AS total_errors"),
+        F.expr("sum(n1) AS errors_last_hour"),
+        *(
+            F.expr(f"sum(CASE WHEN err_type = '{t}' THEN n24 ELSE 0 END) AS {a}")
+            for t, a in types
+        ),
+        F.expr("coalesce(sum(n), 0) AS n_week"),
+        F.expr("count(DISTINCT d) AS n_days"),
+        F.expr(f"least({top}).t AS most_common"),
+    )
+
+    def row(section, key, n, metric, verdict):
+        return (
+            f"struct('{section}' AS section, '{key}' AS key, {n} AS n,"
+            f" CAST({metric} AS DOUBLE) AS metric,"
+            f" CAST({verdict} AS STRING) AS verdict)"
+        )
+
+    alert = (
+        f"errors_last_hour > {_EMR_HOUR_MAX} OR total_errors > {_EMR_DAY_MAX}"
+        " OR n_type > 0 OR n_value > 0 OR n_conn > 0"
+    )
+    rows = (
+        [
+            row(
+                "summary", "last_24h", "total_errors", "errors_last_hour",
+                f"CASE WHEN {alert} THEN 'ALERT' ELSE 'OK' END",
             )
-        )
-    summary = summary.unionByName(
-        census.select(
-            F.lit("category").alias("section"),
-            F.lit("Other").alias("key"),
-            F.col("n_other").alias("n"),
-            F.lit(None).cast("double").alias("metric"),
-            F.lit(None).cast("string").alias("verdict"),
-        )
+        ]
+        + [
+            row(
+                "category", t, a, "NULL",
+                "NULL" if t == "Other" else f"CASE WHEN {a} > 0 THEN 'CRITICAL' END",
+            )
+            for t, a in types
+        ]
+        + [
+            row(
+                "report", "week", "n_week",
+                "round(CAST(n_week AS DOUBLE)"
+                " / greatest(n_days, CAST(1 AS BIGINT)), 6)",
+                "most_common",
+            )
+        ]
     )
-    weekly = (
-        errs.crossJoin(F.broadcast(now))
-        .filter(
-            F.col("ts")
-            >= F.col("now") - F.expr(f"INTERVAL {_EMR_REPORT_DAYS} DAY")
-        )
-        .localCheckpoint()
+    # an empty week has no most common type, so no report row
+    summary = census.selectExpr(f"inline(array({', '.join(rows)}))").filter(
+        "section <> 'report' OR n > 0"
     )
-    by_day = weekly.groupBy(F.to_date("ts").alias("d")).agg(
-        F.count(F.lit(1)).cast("long").alias("n")
-    ).select(
-        F.lit("errors_by_day").alias("section"),
-        F.col("d").cast("string").alias("key"),
+    by_day = days.groupBy("d").agg(F.expr("sum(n) AS n")).selectExpr(
+        "'errors_by_day' AS section",
+        "CAST(d AS STRING) AS key",
         "n",
-        F.lit(None).cast("double").alias("metric"),
-        F.lit(None).cast("string").alias("verdict"),
+        "CAST(NULL AS DOUBLE) AS metric",
+        "CAST(NULL AS STRING) AS verdict",
     )
-    top = (
-        weekly.groupBy("err_type")
-        .agg(F.count(F.lit(1)).alias("c"))
-        .orderBy(F.col("c").desc(), "err_type")
-        .limit(1)
-        .select(F.col("err_type").alias("most_common"))
-    )
-    report = (
-        weekly.agg(
-            F.count(F.lit(1)).cast("long").alias("n"),
-            F.round(
-                F.count(F.lit(1)).cast("double")
-                / F.greatest(
-                    F.countDistinct(F.to_date("ts")), F.lit(1).cast("long")
-                ),
-                6,
-            ).alias("metric"),
-        )
-        .crossJoin(F.broadcast(top))
-        .select(
-            F.lit("report").alias("section"),
-            F.lit("week").alias("key"),
-            "n",
-            "metric",
-            F.col("most_common").alias("verdict"),
-        )
-    )
-    return summary.unionByName(by_day).unionByName(report)
+    return summary.unionByName(by_day)
 
 
 # ---------------------------------------------------------------------------
@@ -8159,9 +8140,9 @@ def forecast_bundle_rescaling(spark: SparkSession, sf_dir: str) -> DataFrame:
     horizon set (bounded 5 rows per group); latest_close is a
     per-ticker rank-1 window."""
     o = load_table(spark, sf_dir, "orders")
-    closes, _ = _trade_legs(spark, sf_dir, decimal_net=True)
     px = (
-        closes.join(o, F.col("o_orderkey") == F.col("l_orderkey"))
+        _trade_legs(spark, sf_dir, decimal_net=True)
+        .join(o, F.col("o_orderkey") == F.col("l_orderkey"))
         .filter((F.col("o_orderstatus") == "F") & (F.col("cq") > 0))
         .select(
             F.concat(F.lit("T"), (F.col("o_custkey") % 25).cast("string"))

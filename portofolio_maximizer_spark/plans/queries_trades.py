@@ -125,11 +125,9 @@ def round_trips(spark: SparkSession, sf_dir: str) -> DataFrame:
     number (summed), open lot = all unflagged line-1 legs (summed) —
     deterministic under ties, which row_number/ANY_VALUE are not
     (SURVEY §7.3 item 2: determinism for the oracle)."""
-    closes, opens = _trade_legs(spark, sf_dir)
-    cut = F.col("l_orderkey") < 3000
-    c, o = closes.filter(cut).alias("c"), opens.filter(cut).alias("o")
-    return c.join(o, F.col("o.l_orderkey") == F.col("c.l_orderkey"), "left").select(
-        F.col("c.l_orderkey").alias("orderkey"),
+    legs = _trade_legs(spark, sf_dir).filter(F.col("l_orderkey") < 3000)
+    return legs.select(
+        F.col("l_orderkey").alias("orderkey"),
         r6(F.col("cq")).alias("close_qty"),
         r6(F.col("oq")).alias("open_qty"),
         r6(F.col("cnet") - F.col("onet")).alias("gross_pnl"),
@@ -1458,7 +1456,7 @@ def canonical_legs_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     `_sleeve_trades_frame`, `ticker_eligibility_classification`,
     `context_quality_report`, `performance_chart_data` — and
     `quality_pipeline_status`, which composes them) share one lineitem
-    scan pair instead of re-deriving it per query. At cluster scale the
+    pass instead of re-deriving it per query. At cluster scale the
     checkpoint is an order-grain frame (≪ lineitem) partitioned by the
     shuffle that built it."""
     from ..operators.memo import memoize_checkpoint
@@ -1483,75 +1481,83 @@ def _build_canonical_legs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _trade_legs(
     spark: SparkSession, sf_dir: str, decimal_net: bool = False
-) -> tuple[DataFrame, DataFrame]:
-    """The two lots of every round trip, each keyed by ``l_orderkey`` —
-    the close and open sides of the reference's round_trips view
+) -> DataFrame:
+    """Both lots of every round trip, one row per ``l_orderkey`` — the
+    close and open sides of the reference's round_trips view
     (`etl/database_manager.py:1404-1425`; see `round_trips`).
 
     Line numbers are not unique within an order, so both are AGGREGATED
-    lots: ``closes`` sums all legs at the max line number (cq, cnet,
-    cship, close_d = to_date(cship), ctax, bar_high, bar_low);
-    ``opens`` sums the unflagged line-1 legs (oq, onet, oship,
-    ostatus). Consumers read a subset; Catalyst's column pruning drops
-    the aggregates they never read, so each plan is the one a
-    hand-written subset would give. ``decimal_net`` sums the net in
+    lots: the close lot sums all legs at the max line number (cq, cnet,
+    cship, close_d = to_date(cship), ctax, bar_high, bar_low); the open
+    lot sums the unflagged line-1 legs (oq, onet, oship, ostatus), and
+    ``n_open`` counts them. Every row has a close lot; the open columns
+    are NULL exactly where an order has no open leg (``n_open = 0``),
+    which is what a LEFT JOIN of separate lot aggregates gives.
+    Consumers read a subset; Catalyst's column pruning drops the
+    aggregates they never read. ``decimal_net`` sums the net in
     decimal(18,2) x decimal(5,2) instead of double, for callers whose
     price quotients must be bit-identical to the oracle's DECIMAL sums
-    (SURVEY §7.3 item 6)."""
-    li = load_table(spark, sf_dir, "lineitem")
+    (SURVEY §7.3 item 6).
+
+    Scale: ONE lineitem pass — a max-line window partitioned by the
+    order key, then one groupBy on the same key with CASE-guarded lot
+    aggregates, so the window's exchange also serves the groupBy: one
+    full lineitem shuffle and no join. No UDF."""
     if decimal_net:
-        net = F.col("l_extendedprice").cast("decimal(18,2)") * (
-            F.lit(1) - F.col("l_discount")
-        ).cast("decimal(5,2)")
+        net = (
+            "CAST(l_extendedprice AS DECIMAL(18,2))"
+            " * CAST(1 - l_discount AS DECIMAL(5,2))"
+        )
     else:
-        net = F.col("l_extendedprice") * (1 - F.col("l_discount"))
-    mx = li.groupBy("l_orderkey").agg(F.max("l_linenumber").alias("maxline"))
-    closes = (
-        li.join(
-            mx,
-            (li.l_orderkey == mx.l_orderkey) & (li.l_linenumber == mx.maxline),
-        )
-        .drop(mx.l_orderkey)
-        .groupBy("l_orderkey")
-        .agg(
-            F.sum("l_quantity").alias("cq"),
-            F.sum(net).alias("cnet"),
-            F.max("l_shipdate").alias("cship"),
-            F.to_date(F.max("l_shipdate")).alias("close_d"),
-            F.min("l_tax").alias("ctax"),
-            F.max(F.col("l_extendedprice") / F.col("l_quantity")).alias(
-                "bar_high"
-            ),
-            F.min(F.col("l_extendedprice") / F.col("l_quantity")).alias(
-                "bar_low"
-            ),
+        net = "l_extendedprice * (1 - l_discount)"
+    legs = (
+        load_table(spark, sf_dir, "lineitem")
+        # a leg without an order key or a line number is in no lot
+        .filter("l_orderkey IS NOT NULL AND l_linenumber IS NOT NULL")
+        .selectExpr(
+            "l_orderkey", "l_quantity", "l_extendedprice", "l_discount",
+            "l_shipdate", "l_tax", "l_linestatus",
+            "l_linenumber = max(l_linenumber) OVER (PARTITION BY l_orderkey)"
+            " AS is_c",
+            "l_linenumber = 1 AND l_returnflag <> 'R' AS is_o",
         )
     )
-    opens = (
-        li.filter((F.col("l_linenumber") == 1) & (F.col("l_returnflag") != "R"))
-        .groupBy("l_orderkey")
-        .agg(
-            F.sum("l_quantity").alias("oq"),
-            F.sum(net).alias("onet"),
-            F.min("l_shipdate").alias("oship"),
-            F.max("l_linestatus").alias("ostatus"),
+    return legs.groupBy("l_orderkey").agg(
+        *(
+            F.expr(e)
+            for e in (
+                "sum(CASE WHEN is_c THEN l_quantity END) AS cq",
+                f"sum(CASE WHEN is_c THEN {net} END) AS cnet",
+                "max(CASE WHEN is_c THEN l_shipdate END) AS cship",
+                "to_date(max(CASE WHEN is_c THEN l_shipdate END)) AS close_d",
+                "min(CASE WHEN is_c THEN l_tax END) AS ctax",
+                "max(CASE WHEN is_c THEN l_extendedprice / l_quantity END)"
+                " AS bar_high",
+                "min(CASE WHEN is_c THEN l_extendedprice / l_quantity END)"
+                " AS bar_low",
+                "sum(CASE WHEN is_o THEN l_quantity END) AS oq",
+                f"sum(CASE WHEN is_o THEN {net} END) AS onet",
+                "min(CASE WHEN is_o THEN l_shipdate END) AS oship",
+                "max(CASE WHEN is_o THEN l_linestatus END) AS ostatus",
+                "count(CASE WHEN is_o THEN 1 END) AS n_open",
+            )
         )
     )
-    return closes, opens
 
 
 def _closed_trades(
     spark: SparkSession, sf_dir: str, decimal_net: bool = False
 ) -> DataFrame:
-    """Closed round trips: the ``_trade_legs`` close lot ("c") inner
-    joined to its open lot ("op") and to the 'F'-status order, with both
-    lots non-empty (oq > 0 AND cq > 0). The ``c`` / ``op`` qualifiers
-    stay visible, so consumers read ``F.col("c.l_orderkey")``."""
-    closes, opens = _trade_legs(spark, sf_dir, decimal_net)
+    """Closed round trips: the ``_trade_legs`` lots ("c") inner joined
+    to the 'F'-status order, with both lots non-empty (oq > 0 AND
+    cq > 0). The ``c`` qualifier stays visible, so consumers read
+    ``F.col("c.l_orderkey")``.
+
+    Scale: the one-pass lot frame plus one join to orders."""
     o = load_table(spark, sf_dir, "orders")
-    c, op = closes.alias("c"), opens.alias("op")
     return (
-        c.join(op, F.col("op.l_orderkey") == F.col("c.l_orderkey"))
+        _trade_legs(spark, sf_dir, decimal_net)
+        .alias("c")
         .join(
             o.filter(F.col("o_orderstatus") == "F"),
             F.col("o_orderkey") == F.col("c.l_orderkey"),
@@ -2170,206 +2176,146 @@ def ticker_eligibility_classification(
     branch.
 
     Scale: per-order lot aggregation (shared via
-    ``canonical_legs_frame``), two per-ticker rank windows for the
-    trimmed tails, key-cardinality joins. No UDF, no collect."""
-    pnl = F.round(F.col("cnet") - F.col("onet"), 6)
-    capital = F.abs(F.col("onet") / F.col("oq")) * F.col("cq")
-    trades = canonical_legs_frame(spark, sf_dir).select(
-        "ticker",
-        "orderkey",
-        pnl.alias("pnl"),
-        F.when(F.col("ctax") < 0.015, "STOP_LOSS")
-        .when(F.col("ctax") < 0.045, "TIME_EXIT")
-        .when(F.col("ctax") < 0.075, "TAKE_PROFIT")
-        .otherwise("OTHER")
-        .alias("exit_reason"),
-        F.when(capital > 1e-9, pnl / capital).alias("r"),
-    )
-    t = trades.groupBy("ticker").agg(
-        F.count(F.lit(1)).alias("n_trades"),
-        F.avg(F.when(F.col("pnl") > 0, 1.0).otherwise(0.0)).alias("win_rate"),
-        F.sum(F.when(F.col("pnl") > 0, F.col("pnl")).otherwise(0.0)).alias(
-            "gross_win"
-        ),
-        F.sum(
-            F.when(F.col("pnl") <= 0, F.abs(F.col("pnl"))).otherwise(0.0)
-        ).alias("gross_loss"),
-        F.round(F.sum("pnl"), 2).alias("total_pnl"),
-        F.avg(
-            F.when(F.col("exit_reason") == "TAKE_PROFIT", 1.0).otherwise(0.0)
-        ).alias("tp_freq"),
-        F.count("r").alias("n_ret"),
-        F.sum(F.greatest(F.col("r") - _ELG_TAU, F.lit(0.0))).alias("o_gain"),
-        F.sum(F.greatest(F.lit(_ELG_TAU) - F.col("r"), F.lit(0.0))).alias(
-            "o_loss"
-        ),
-    )
-    wt = Window.partitionBy("ticker")
-    wdesc = Window.partitionBy("ticker").orderBy(F.col("r").desc(), "orderkey")
-    wins = trades.filter(F.col("r") > 0).select(
-        "ticker",
-        "r",
-        F.row_number().over(wdesc).alias("rk"),
-        F.count(F.lit(1)).over(wt).alias("nw"),
-    )
-    trim_w = F.floor(F.col("nw") * _ELG_TRIM)
-    w = wins.groupBy("ticker").agg(
-        F.any_value("nw").alias("n_wins"),
-        F.sum("r").alias("wsum"),
-        F.avg("r").alias("avg_win"),
-        F.max("r").alias("max_win"),
-        F.sum(F.when(F.col("rk") > trim_w, F.col("r"))).alias("trim_win_sum"),
-        F.sum((F.col("rk") > trim_w).cast("long")).alias("trim_win_n"),
-    )
-    lasc = Window.partitionBy("ticker").orderBy(F.col("r").asc(), "orderkey")
-    losses = trades.filter(F.col("r") < 0).select(
-        "ticker",
-        (-F.col("r")).alias("al"),
-        F.row_number().over(lasc).alias("rk"),
-        F.count(F.lit(1)).over(wt).alias("nl"),
-    )
-    trim_l = F.floor(F.col("nl") * _ELG_TRIM)
-    lo = losses.groupBy("ticker").agg(
-        F.any_value("nl").alias("n_losses"),
-        F.avg("al").alias("avg_loss"),
-        F.sum(F.when(F.col("rk") > trim_l, F.col("al"))).alias("trim_loss_sum"),
-        F.sum((F.col("rk") > trim_l).cast("long")).alias("trim_loss_n"),
-    )
-    j = t.join(w, "ticker", "left").join(lo, "ticker", "left")
-    n_wins = F.coalesce(F.col("n_wins"), F.lit(0))
-    n_losses = F.coalesce(F.col("n_losses"), F.lit(0))
-    pf = (
-        F.when(
-            F.col("gross_loss") > 1e-9,
-            F.least(F.col("gross_win") / F.col("gross_loss"), F.lit(99.0)),
+    ``canonical_legs_frame``), then ONE per-ticker pass: the trimmed
+    tails' win and loss ranks are running counts in one
+    ticker-partitioned window layer, and one groupBy folds the totals
+    and both tails with CASE-guarded aggregates, so every step rides
+    the one ticker exchange and no join is planned. No UDF, no
+    collect."""
+    d = "{!r}D".format  # a bare 0.0 is DECIMAL in Spark SQL
+    tau, trim, sent = d(_ELG_TAU), d(_ELG_TRIM), d(_ELG_SENT)
+    trades = (
+        canonical_legs_frame(spark, sf_dir)
+        .selectExpr(
+            "ticker",
+            "orderkey",
+            "round(cnet - onet, 6) AS pnl",
+            "CASE WHEN ctax < 0.015D THEN 'STOP_LOSS'"
+            " WHEN ctax < 0.045D THEN 'TIME_EXIT'"
+            " WHEN ctax < 0.075D THEN 'TAKE_PROFIT'"
+            " ELSE 'OTHER' END AS exit_reason",
+            "abs(onet / oq) * cq AS capital",
         )
-        .when(F.col("gross_win") > 0, 99.0)
-        .otherwise(0.0)
-    )
-    omega = (
-        F.when(F.col("n_ret") < 10, 0.0)
-        .when(F.col("o_loss") == 0.0, _ELG_SENT)
-        .otherwise(F.col("o_gain") / F.col("o_loss"))
-    )
-    payoff_raw = F.round(
-        F.when(
-            (n_losses == 0) | F.col("avg_loss").isNull(),
-            F.when(n_wins > 0, _ELG_SENT).otherwise(0.0),
-        ).otherwise(
-            F.coalesce(F.col("avg_win"), F.lit(0.0))
-            / F.greatest(F.col("avg_loss"), F.lit(1e-12))
-        ),
-        6,
-    )
-    trim_avg_win = F.col("trim_win_sum") / F.greatest(
-        F.col("trim_win_n"), F.lit(1)
-    )
-    trim_avg_loss = F.col("trim_loss_sum") / F.greatest(
-        F.col("trim_loss_n"), F.lit(1)
-    )
-    payoff_trimmed = F.round(
-        F.when(
-            F.coalesce(F.col("trim_loss_n"), F.lit(0)) == 0,
-            F.when(
-                F.coalesce(F.col("trim_win_n"), F.lit(0)) > 0, _ELG_SENT
-            ).otherwise(0.0),
+        .selectExpr(
+            "ticker", "orderkey", "pnl", "exit_reason",
+            "CASE WHEN capital > 1e-9D THEN pnl / capital END AS r",
         )
-        .when(F.coalesce(F.col("trim_win_n"), F.lit(0)) == 0, 0.0)
-        .otherwise(trim_avg_win / F.greatest(trim_avg_loss, F.lit(1e-12))),
-        6,
     )
-    wc = F.round(
-        F.when(
-            n_wins > 0,
-            F.col("max_win") / F.greatest(F.col("wsum"), F.lit(1e-12)),
-        ).otherwise(0.0),
-        6,
+    # rk_w / rk_l: a win's (loss's) rank among the ticker's wins
+    # (losses) by r DESC (ASC), orderkey — the running count of wins
+    # (losses) up to the row
+    run = (
+        "PARTITION BY ticker ORDER BY r {}, orderkey"
+        " ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW"
     )
-    support = (
-        (n_wins >= _ELG_MIN_WINS)
-        & (n_losses >= _ELG_MIN_LOSSES)
-        & (wc <= _ELG_MAX_WC)
+    ranked = trades.selectExpr(
+        "*",
+        f"sum(CAST(r < 0 AS BIGINT)) OVER ({run.format('ASC')}) AS rk_l",
+        f"sum(CAST(r > 0 AS BIGINT)) OVER ({run.format('DESC')}) AS rk_w",
+        "sum(CAST(r > 0 AS BIGINT)) OVER (PARTITION BY ticker) AS nw",
+        "sum(CAST(r < 0 AS BIGINT)) OVER (PARTITION BY ticker) AS nl",
     )
-    cls = j.select(
+    per = ranked.groupBy("ticker").agg(
+        *(
+            F.expr(e)
+            for e in (
+                "count(1) AS n_trades",
+                "avg(CASE WHEN pnl > 0 THEN 1.0D ELSE 0.0D END) AS win_rate",
+                "sum(CASE WHEN pnl > 0 THEN pnl ELSE 0.0D END) AS gross_win",
+                "sum(CASE WHEN pnl <= 0 THEN abs(pnl) ELSE 0.0D END)"
+                " AS gross_loss",
+                "round(sum(pnl), 2) AS total_pnl",
+                "avg(CASE WHEN exit_reason = 'TAKE_PROFIT' THEN 1.0D"
+                " ELSE 0.0D END) AS tp_freq",
+                "count(r) AS n_ret",
+                f"sum(greatest(r - {tau}, 0.0D)) AS o_gain",
+                f"sum(greatest({tau} - r, 0.0D)) AS o_loss",
+                # the win/loss aggregates are NULL for a ticker without
+                # wins/losses, as a LEFT JOIN of per-side folds gives
+                "max(CASE WHEN r > 0 THEN nw END) AS n_wins",
+                "sum(CASE WHEN r > 0 THEN r END) AS wsum",
+                "avg(CASE WHEN r > 0 THEN r END) AS avg_win",
+                "max(CASE WHEN r > 0 THEN r END) AS max_win",
+                f"sum(CASE WHEN r > 0 AND rk_w > floor(nw * {trim})"
+                " THEN r END) AS trim_win_sum",
+                f"sum(CASE WHEN r > 0 THEN CAST(rk_w > floor(nw * {trim})"
+                " AS BIGINT) END) AS trim_win_n",
+                "max(CASE WHEN r < 0 THEN nl END) AS n_losses",
+                "avg(CASE WHEN r < 0 THEN -r END) AS avg_loss",
+                f"sum(CASE WHEN r < 0 AND rk_l > floor(nl * {trim})"
+                " THEN -r END) AS trim_loss_sum",
+                f"sum(CASE WHEN r < 0 THEN CAST(rk_l > floor(nl * {trim})"
+                " AS BIGINT) END) AS trim_loss_n",
+            )
+        )
+    )
+    metrics = per.selectExpr(
+        "ticker", "n_trades", "win_rate", "total_pnl", "tp_freq",
+        "CASE WHEN gross_loss > 1e-9D THEN least(gross_win / gross_loss, 99.0D)"
+        " WHEN gross_win > 0 THEN 99.0D ELSE 0.0D END AS profit_factor",
+        f"CASE WHEN n_ret < 10 THEN 0.0D WHEN o_loss = 0.0D THEN {sent}"
+        " ELSE o_gain / o_loss END AS omega",
+        "coalesce(n_wins, 0) AS n_wins",
+        "coalesce(n_losses, 0) AS n_losses",
+        "round(CASE WHEN coalesce(n_losses, 0) = 0 OR avg_loss IS NULL"
+        f" THEN CASE WHEN coalesce(n_wins, 0) > 0 THEN {sent} ELSE 0.0D END"
+        " ELSE coalesce(avg_win, 0.0D) / greatest(avg_loss, 1e-12D) END, 6)"
+        " AS payoff_raw",
+        "round(CASE WHEN coalesce(trim_loss_n, 0) = 0"
+        f" THEN CASE WHEN coalesce(trim_win_n, 0) > 0 THEN {sent} ELSE 0.0D END"
+        " WHEN coalesce(trim_win_n, 0) = 0 THEN 0.0D"
+        " ELSE (trim_win_sum / greatest(trim_win_n, 1))"
+        " / greatest(trim_loss_sum / greatest(trim_loss_n, 1), 1e-12D) END, 6)"
+        " AS payoff_trimmed",
+        "round(CASE WHEN coalesce(n_wins, 0) > 0"
+        " THEN max_win / greatest(wsum, 1e-12D) ELSE 0.0D END, 6) AS wc",
+    )
+    omega_ok = f"omega >= {d(_ELG_OMEGA_FLOOR)}"
+    payoff_ok = f"payoff_eff >= {d(_ELG_PAYOFF_FLOOR)}"
+    tp_ok = f"tp_freq >= {d(_ELG_TP_FLOOR)}"
+    cls = metrics.selectExpr(
+        "ticker", "n_trades", "win_rate", "profit_factor", "total_pnl",
+        "tp_freq", "omega",
+        f"CASE WHEN n_wins >= {_ELG_MIN_WINS} AND n_losses >= {_ELG_MIN_LOSSES}"
+        f" AND wc <= {d(_ELG_MAX_WC)} THEN least(payoff_raw, payoff_trimmed)"
+        " ELSE 0.0D END AS payoff_eff",
+    ).selectExpr(
+        "*",
+        f"n_trades >= {_ELG_HEALTHY_N} AND {omega_ok} AND {payoff_ok}"
+        f" AND {tp_ok} AS healthy",
+        f"n_trades >= {_ELG_WEAK_N} AND ({omega_ok} OR {payoff_ok} OR {tp_ok})"
+        " AS weak",
+    )
+    return cls.selectExpr(
         "ticker",
         "n_trades",
-        "win_rate",
-        pf.alias("profit_factor"),
+        "round(win_rate, 6) AS win_rate",
+        "round(profit_factor, 6) AS profit_factor",
         "total_pnl",
-        "tp_freq",
-        omega.alias("omega"),
-        F.when(support, F.least(payoff_raw, payoff_trimmed))
-        .otherwise(0.0)
-        .alias("payoff_eff"),
-    )
-    healthy = (
-        (F.col("n_trades") >= _ELG_HEALTHY_N)
-        & (F.col("omega") >= _ELG_OMEGA_FLOOR)
-        & (F.col("payoff_eff") >= _ELG_PAYOFF_FLOOR)
-        & (F.col("tp_freq") >= _ELG_TP_FLOOR)
-    )
-    weak = (F.col("n_trades") >= _ELG_WEAK_N) & (
-        (F.col("omega") >= _ELG_OMEGA_FLOOR)
-        | (F.col("payoff_eff") >= _ELG_PAYOFF_FLOOR)
-        | (F.col("tp_freq") >= _ELG_TP_FLOOR)
-    )
-    override = F.col("ticker") == "T7"
-    weak_codes = F.concat_ws(
-        ",",
-        F.when(F.col("omega") < _ELG_OMEGA_FLOOR, "omega_below_hurdle"),
-        F.when(F.col("payoff_eff") < _ELG_PAYOFF_FLOOR, "payoff_below_target"),
-        F.when(
-            F.col("tp_freq") < _ELG_TP_FLOOR,
-            "take_profit_frequency_below_floor",
-        ),
-        F.lit("sufficient_weak_evidence"),
-    )
-    lab_codes = F.coalesce(
-        F.nullif(
-            F.concat_ws(
-                ",",
-                F.when(
-                    F.col("n_trades") < _ELG_HEALTHY_N,
-                    "insufficient_trade_count",
-                ),
-                F.when(
-                    F.col("win_rate") < _ELG_WR_FLOOR,
-                    "diagnostic_win_rate_below_r3_floor",
-                ),
-                F.when(
-                    F.col("profit_factor") < _ELG_PF_FLOOR,
-                    "diagnostic_profit_factor_below_r3_floor",
-                ),
-                F.when(
-                    (F.col("omega") >= _ELG_OMEGA_FLOOR)
-                    & (F.col("payoff_eff") >= _ELG_PAYOFF_FLOOR)
-                    & (F.col("tp_freq") >= _ELG_TP_FLOOR),
-                    "primary_metrics_below_floor",
-                ),
-            ),
-            F.lit(""),
-        ),
-        F.lit("manual_research_only"),
-    )
-    return cls.select(
-        "ticker",
-        "n_trades",
-        r6(F.col("win_rate")).alias("win_rate"),
-        r6(F.col("profit_factor")).alias("profit_factor"),
-        "total_pnl",
-        r6(F.col("omega")).alias("omega_ratio"),
-        r6(F.col("payoff_eff")).alias("payoff_asymmetry_effective"),
-        r6(F.col("tp_freq")).alias("take_profit_frequency"),
-        F.when(override, "LAB_ONLY")
-        .when(healthy, "HEALTHY")
-        .when(weak, "WEAK")
-        .otherwise("LAB_ONLY")
-        .alias("status"),
-        F.when(override, "explicit_lab_only_override")
-        .when(healthy, "meets_take_profit_policy")
-        .when(weak, weak_codes)
-        .otherwise(lab_codes)
-        .alias("reasons"),
+        "round(omega, 6) AS omega_ratio",
+        "round(payoff_eff, 6) AS payoff_asymmetry_effective",
+        "round(tp_freq, 6) AS take_profit_frequency",
+        "CASE WHEN ticker = 'T7' THEN 'LAB_ONLY' WHEN healthy THEN 'HEALTHY'"
+        " WHEN weak THEN 'WEAK' ELSE 'LAB_ONLY' END AS status",
+        "CASE WHEN ticker = 'T7' THEN 'explicit_lab_only_override'"
+        " WHEN healthy THEN 'meets_take_profit_policy'"
+        " WHEN weak THEN concat_ws(','"
+        f", CASE WHEN omega < {d(_ELG_OMEGA_FLOOR)} THEN 'omega_below_hurdle' END"
+        f", CASE WHEN payoff_eff < {d(_ELG_PAYOFF_FLOOR)}"
+        " THEN 'payoff_below_target' END"
+        f", CASE WHEN tp_freq < {d(_ELG_TP_FLOOR)}"
+        " THEN 'take_profit_frequency_below_floor' END"
+        ", 'sufficient_weak_evidence')"
+        " ELSE coalesce(nullif(concat_ws(','"
+        f", CASE WHEN n_trades < {_ELG_HEALTHY_N}"
+        " THEN 'insufficient_trade_count' END"
+        f", CASE WHEN win_rate < {d(_ELG_WR_FLOOR)}"
+        " THEN 'diagnostic_win_rate_below_r3_floor' END"
+        f", CASE WHEN profit_factor < {d(_ELG_PF_FLOOR)}"
+        " THEN 'diagnostic_profit_factor_below_r3_floor' END"
+        f", CASE WHEN {omega_ok} AND {payoff_ok} AND {tp_ok}"
+        " THEN 'primary_metrics_below_floor' END), ''),"
+        " 'manual_research_only') END AS reasons",
     )
 
 
@@ -6400,20 +6346,14 @@ def trade_event_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """R152: the dashboard's bounded trade-event feed — ENTRY rows from
     opening legs, SELL exits classified by round-trip PnL, most-recent-50
     by ship date (TakeOrderedAndProject; bounded at any scale)."""
-    closes, opens = _trade_legs(spark, sf_dir)
-    cut = F.col("l_orderkey") < 3000
-    closes, opens = closes.filter(cut), opens.filter(cut)
-    entries = opens.join(
-        closes.select("l_orderkey"), "l_orderkey"
-    ).select(
+    legs = _trade_legs(spark, sf_dir).filter(F.col("l_orderkey") < 3000)
+    entries = legs.filter(F.col("n_open") > 0).select(
         F.col("l_orderkey").alias("orderkey"),
         F.lit("BUY").alias("action"),
         F.col("oship").alias("ts"),
         F.lit(None).cast("double").alias("pnl"),
     )
-    exits = closes.join(
-        opens.select("l_orderkey", "onet"), "l_orderkey", "left"
-    ).select(
+    exits = legs.select(
         F.col("l_orderkey").alias("orderkey"),
         F.lit("SELL").alias("action"),
         F.col("cship").alias("ts"),

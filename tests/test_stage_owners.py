@@ -8,8 +8,9 @@ package, inside the pack's builder function, and every consumer calls
 that builder.
 
 The same rule holds for the round-trip lots: the max-line close lot and
-the line-1 open lot are derived once, in ``queries_trades._trade_legs``,
-and consumers call it or ``_closed_trades``.
+the line-1 open lot are derived once, in ``queries_trades._trade_legs``
+(one lineitem pass with a max-line window), and consumers call it or
+``_closed_trades``.
 """
 
 from __future__ import annotations
@@ -108,32 +109,44 @@ def test_oracle_reads_only_staged_artifacts():
 #: the max-line grouping that defines a close lot
 MAXLINE = 'agg(F.max("l_linenumber").alias("maxline"))'
 
-#: functions allowed to spell it: the owner, plus three variants that are
-#: not the lot pair (a distinct-key census, a decimal(28,8) net cast back
-#: to double, and a leg-grain census)
+#: functions allowed to spell it: three variants that are not the lot
+#: pair (a distinct-key census, a decimal(28,8) net cast back to double,
+#: and a leg-grain census)
 MAXLINE_OWNERS = [
-    "_trade_legs",
     "check_constraint_validation",
     "open_trade_liquidation_plan",
     "platt_contract_audit",
 ]
 
+#: the max-line window of the one-pass lot derivation, and its one owner
+MAXLINE_WINDOW = "max(l_linenumber) OVER (PARTITION BY l_orderkey)"
+MAXLINE_WINDOW_OWNERS = ["_trade_legs"]
 
-def test_close_lot_is_derived_in_one_place():
+
+def _spelling_sites(spelling: str) -> list[str]:
+    """Innermost enclosing function of every line that spells ``spelling``."""
     sites = []
     for path in _package_files():
         with open(path) as f:
             src = f.read()
-        if MAXLINE not in src:
+        if spelling not in src:
             continue
         funcs = [
             n for n in ast.walk(ast.parse(src, path)) if isinstance(n, ast.FunctionDef)
         ]
         for lineno, line in enumerate(src.splitlines(), 1):
-            if MAXLINE in line:
+            if spelling in line:
                 inner = [f for f in funcs if f.lineno <= lineno <= f.end_lineno]
                 sites.append(max(inner, key=lambda f: f.lineno).name if inner else path)
-    assert sorted(sites) == MAXLINE_OWNERS, (
+    return sorted(sites)
+
+
+def test_close_lot_is_derived_in_one_place():
+    assert _spelling_sites(MAXLINE) == MAXLINE_OWNERS, (
         "close lots derived outside _trade_legs; call _trade_legs or "
-        f"_closed_trades instead: {sorted(sites)}"
+        f"_closed_trades instead: {_spelling_sites(MAXLINE)}"
+    )
+    assert _spelling_sites(MAXLINE_WINDOW) == MAXLINE_WINDOW_OWNERS, (
+        "the max-line window belongs to _trade_legs alone: "
+        f"{_spelling_sites(MAXLINE_WINDOW)}"
     )

@@ -4721,11 +4721,14 @@ def error_monitor_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     active days, most-common type (`generate_error_report:469-516`).
     "now" anchors to the stream's newest timestamp.
 
-    Scale: the error channel is a filtered scan folded ONCE into a
-    bounded (7 days x 4 types) groupBy that carries the 24h and 1h
-    counts; one census over that fold gives the summary, category and
-    report rows, and the per-day rollup regroups it. No checkpoint, no
-    collect."""
+    Scale: the error channel is a filtered two-column scan (`event_id`,
+    `ts`) read TWICE: once for "now", then once more, cut to the 7-day
+    window, into a bounded (<= 8 days) per-day fold that carries the
+    week, 24h and 1h counts per type. The windows end at the newest
+    error's microsecond timestamp, so no bounded fold can give their
+    exact counts before "now" is known. One census over the day rows
+    gives every output row, the per-day ones from the census's
+    day list. No checkpoint, no collect, no self-join."""
     ev = load_table(spark, sf_dir, "events")
     errs = ev.filter(F.col("event_id") % 50 == 0).select(
         "ts",
@@ -4736,49 +4739,54 @@ def error_monitor_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("err_type"),
     )
     now = errs.agg(F.max("ts").alias("now"))
-    # the 24h and 1h windows lie inside the 7-day one
-    days = (
-        errs.crossJoin(F.broadcast(now))
-        .filter(f"ts >= now - INTERVAL {_EMR_REPORT_DAYS} DAY")
-        .groupBy(F.to_date("ts").alias("d"), "err_type")
-        .agg(
-            F.expr("count(1) AS n"),
-            F.expr("count(CASE WHEN ts >= now - INTERVAL 24 HOUR THEN 1 END) AS n24"),
-            F.expr("count(CASE WHEN ts >= now - INTERVAL 1 HOUR THEN 1 END) AS n1"),
-        )
-    )
     types = [
         ("TypeError", "n_type"),
         ("ValueError", "n_value"),
         ("ConnectionError", "n_conn"),
         ("Other", "n_other"),
     ]
+    # the 24h and 1h windows lie inside the 7-day one
+    h24 = "ts >= now - INTERVAL 24 HOUR"
+    days = (
+        errs.crossJoin(F.broadcast(now))
+        .filter(f"ts >= now - INTERVAL {_EMR_REPORT_DAYS} DAY")
+        .groupBy(F.to_date("ts").alias("d"))
+        .agg(
+            F.expr("count(1) AS n"),
+            F.expr(f"count(CASE WHEN {h24} THEN 1 END) AS n24"),
+            F.expr("count(CASE WHEN ts >= now - INTERVAL 1 HOUR THEN 1 END) AS n1"),
+            *(
+                F.expr(f"count(CASE WHEN err_type = '{t}' AND {h24} THEN 1 END) AS {a}")
+                for t, a in types
+            ),
+            *(
+                F.expr(f"count(CASE WHEN err_type = '{t}' THEN 1 END) AS w_{a}")
+                for t, a in types
+            ),
+        )
+    )
     # the most common type of the week, ties to the first name: the
     # least (-count, name) over the four types err_type can take
     top = ", ".join(
-        f"named_struct('c', -sum(CASE WHEN err_type = '{t}' THEN n ELSE 0 END),"
-        f" 't', '{t}')"
-        for t, _ in types
+        f"named_struct('c', -sum(w_{a}), 't', '{t}')" for t, a in types
     )
     # the per-type and 1h sums are NULL only when the window is empty,
     # as a fold over no error rows gives; the totals count, so they are 0
     census = days.agg(
         F.expr("coalesce(sum(n24), 0) AS total_errors"),
         F.expr("sum(n1) AS errors_last_hour"),
-        *(
-            F.expr(f"sum(CASE WHEN err_type = '{t}' THEN n24 ELSE 0 END) AS {a}")
-            for t, a in types
-        ),
+        *(F.expr(f"sum({a}) AS {a}") for _, a in types),
         F.expr("coalesce(sum(n), 0) AS n_week"),
-        F.expr("count(DISTINCT d) AS n_days"),
+        F.expr("count(1) AS n_days"),
         F.expr(f"least({top}).t AS most_common"),
+        F.expr("collect_list(struct(d, n)) AS by_day"),
     )
 
     def row(section, key, n, metric, verdict):
         return (
-            f"struct('{section}' AS section, '{key}' AS key, {n} AS n,"
-            f" CAST({metric} AS DOUBLE) AS metric,"
-            f" CAST({verdict} AS STRING) AS verdict)"
+            f"named_struct('section', {section}, 'key', {key}, 'n', {n},"
+            f" 'metric', CAST({metric} AS DOUBLE),"
+            f" 'verdict', CAST({verdict} AS STRING))"
         )
 
     alert = (
@@ -4788,38 +4796,31 @@ def error_monitor_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows = (
         [
             row(
-                "summary", "last_24h", "total_errors", "errors_last_hour",
+                "'summary'", "'last_24h'", "total_errors", "errors_last_hour",
                 f"CASE WHEN {alert} THEN 'ALERT' ELSE 'OK' END",
             )
         ]
         + [
             row(
-                "category", t, a, "NULL",
+                "'category'", f"'{t}'", a, "NULL",
                 "NULL" if t == "Other" else f"CASE WHEN {a} > 0 THEN 'CRITICAL' END",
             )
             for t, a in types
         ]
         + [
             row(
-                "report", "week", "n_week",
+                "'report'", "'week'", "n_week",
                 "round(CAST(n_week AS DOUBLE)"
                 " / greatest(n_days, CAST(1 AS BIGINT)), 6)",
                 "most_common",
             )
         ]
     )
+    per_day = row("'errors_by_day'", "CAST(x.d AS STRING)", "x.n", "NULL", "NULL")
     # an empty week has no most common type, so no report row
-    summary = census.selectExpr(f"inline(array({', '.join(rows)}))").filter(
-        "section <> 'report' OR n > 0"
-    )
-    by_day = days.groupBy("d").agg(F.expr("sum(n) AS n")).selectExpr(
-        "'errors_by_day' AS section",
-        "CAST(d AS STRING) AS key",
-        "n",
-        "CAST(NULL AS DOUBLE) AS metric",
-        "CAST(NULL AS STRING) AS verdict",
-    )
-    return summary.unionByName(by_day)
+    return census.selectExpr(
+        f"inline(concat(array({', '.join(rows)}), transform(by_day, x -> {per_day})))"
+    ).filter("section <> 'report' OR n > 0")
 
 
 # ---------------------------------------------------------------------------

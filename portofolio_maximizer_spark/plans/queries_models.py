@@ -3695,125 +3695,89 @@ def _arima_replay(s: DataFrame, comp: DataFrame) -> DataFrame:
     re-compute every emitted value independently from the staged
     artifacts.
 
-    Plan-size discipline (optimization round 12): the intermediate
-    frames here (``par``, ``yd``, ``resid``) each feed SEVERAL
-    downstream branches; every DataFrame re-reference embeds a full
-    copy of its lineage into the logical plan, so the un-truncated
-    replay plan grew multiplicatively (the SARIMAX twin measured 4,144
-    plan lines / 242 Exchanges, ~12 s of analysis alone). Eager
-    ``localCheckpoint`` at each fan-out point pins the (tiny:
-    ≤ rows-per-key × keys) frame once and truncates the lineage —
-    values unchanged, one copy of each upstream stage."""
-    from pyspark.sql import Window as W
-
-    par = (
-        comp.filter(F.col("kind") == 0)
-        .groupBy("user_id")
-        .agg(
-            *[
-                F.max(F.when(F.col("idx") == i, F.col("val"))).alias(name)
-                for i, name in enumerate(
-                    ["p", "d", "q", "c", "phi1", "phi2", "th1", "th2", "t0"], 1
-                )
-            ]
-        )
-        .localCheckpoint(eager=False)  # one row per key; feeds 4 branches
-    )
-    wp = W.partitionBy("user_id").orderBy("i")
-    obs = s.select(
-        "user_id",
-        F.col("value").alias("x"),
-        (F.row_number().over(W.partitionBy("user_id").orderBy("rn")) - 1).alias(
-            "i"
-        ),
-        F.count(F.lit(1)).over(W.partitionBy("user_id")).alias("nx"),
-    )
-    lastx = obs.filter(F.col("i") == F.col("nx") - 1).select(
-        "user_id", F.col("x").alias("last_x")
-    )
-    yd = (
-        obs.join(par.select("user_id", "d"), "user_id")
-        .select(
-            "user_id",
-            F.when(
-                F.col("d") == 1, F.col("x") - F.lag("x").over(wp)
-            )
-            .otherwise(F.col("x"))
-            .alias("y"),
-            F.when(F.col("d") == 1, F.col("i") - 1)
-            .otherwise(F.col("i"))
-            .alias("t"),
-        )
-        .filter((F.col("t") >= 0) & F.col("y").isNotNull())
-        .localCheckpoint(eager=False)  # fans out to lag/seasonal branches
-    )
-    el = comp.filter(F.col("kind") == 1).select(
-        "user_id", (F.col("idx") - 1).alias("t"), F.col("val").alias("e")
-    )
-    wt = W.partitionBy("user_id").orderBy("t")
-    je = yd.join(el, ["user_id", "t"]).select(
-        "user_id",
-        "t",
-        "y",
-        "e",
-        F.lag("y", 1).over(wt).alias("y1"),
-        F.lag("y", 2).over(wt).alias("y2"),
-        F.lag("e", 1).over(wt).alias("e1"),
-        F.lag("e", 2).over(wt).alias("e2"),
-    )
-    resid = (
-        je.join(par, "user_id")
-        .filter(F.col("t") >= F.col("t0"))
-        .withColumn(
-            "r",
-            F.col("y")
-            - (
-                F.col("c")
-                + F.col("phi1") * F.col("y1")
-                + F.col("phi2") * F.col("y2")
-                + F.col("th1") * F.col("e1")
-                + F.col("th2") * F.col("e2")
+    Shape: ONE pass partitioned by ``user_id``, no join. The series rows
+    (``user_id, rn, value``) and the component rows (``user_id, kind,
+    idx, val``) are unioned under one exchange; a per-user window layer
+    spreads the 9 parameters, ``last_x`` and x's lag over every row; a
+    ``groupBy(user_id, t)`` pairs y (series row, ``t = rn - 2`` when
+    d = 1 else ``rn - 1``: ``_series.rn`` is dense) with e (kind-1 row,
+    ``t = idx - 1``); a window ordered by t takes the y/e lags; one
+    ``groupBy(user_id)`` folds RSS, m and the forecast state. Every step
+    rides the union's exchange. The join semantics of the oracle hold:
+    a user without a t0 parameter (no kind-0 rows) keeps no residual
+    row and drops out; only t values with both a y and an e are kept;
+    ``tm`` is the max t over ALL y rows (paired or not); the lags are
+    taken over the paired rows before the ``t >= t0`` cut."""
+    par = ["p", "d", "q", "c", "phi1", "phi2", "th1", "th2", "t0"]
+    w = "OVER (PARTITION BY user_id)"
+    rows = (
+        s.unionByName(comp, allowMissingColumns=True)
+        .selectExpr(
+            "user_id", "rn", "value", "kind", "idx", "val",
+            *(
+                f"max(CASE WHEN kind = 0 AND idx = {i} THEN val END) {w} AS {n}"
+                for i, n in enumerate(par, 1)
             ),
+            f"max_by(value, rn) {w} AS last_x",
+            # component rows have a NULL rn and sort first: rn = 1 lags NULL
+            "value - lag(value) OVER (PARTITION BY user_id ORDER BY rn) AS dx",
         )
-        .select("user_id", "t", "y", "r")
-        .localCheckpoint(eager=True)  # feeds sigma/AIC + state branches
+        .selectExpr(
+            "user_id", *par, "last_x", "kind",
+            "CASE WHEN kind IS NOT NULL THEN idx - 1"
+            " WHEN d = 1 THEN rn - 2 ELSE rn - 1 END AS t",
+            "CASE WHEN kind IS NULL THEN"
+            " (CASE WHEN d = 1 THEN dx ELSE value END) END AS y",
+            "CASE WHEN kind = 1 THEN val END AS e",
+        )
+        .filter("kind = 1 OR (kind IS NULL AND t >= 0 AND y IS NOT NULL)")
+        .selectExpr("*", f"max(CASE WHEN kind IS NULL THEN t END) {w} AS tm")
     )
-    k = F.col("p") + F.col("q") + 1
-    sig = (
+    carried = [*par, "last_x", "tm"]
+    wt = "OVER (PARTITION BY user_id ORDER BY t)"
+    resid = (
+        rows.groupBy("user_id", "t")
+        .agg(
+            *(F.expr(f"max({c}) AS {c}") for c in [*carried, "y", "e"]),
+            F.expr("count(kind) AS ne"),
+        )
+        .filter("y IS NOT NULL AND ne > 0")  # a NULL e pairs, as in a join
+        .selectExpr(
+            "user_id", "t", *carried, "y", "e",
+            f"lag(y, 1) {wt} AS y1", f"lag(y, 2) {wt} AS y2",
+            f"lag(e, 1) {wt} AS e1", f"lag(e, 2) {wt} AS e2",
+        )
+        .filter("t >= t0")
+        .selectExpr(
+            "user_id", "t", *carried, "y",
+            "y - ((((c + (phi1 * y1)) + (phi2 * y2)) + (th1 * e1))"
+            " + (th2 * e2)) AS r",
+        )
+    )
+    k = "((p + q) + 1)"
+    base = (
         resid.groupBy("user_id")
         .agg(
-            F.sum(F.col("r") * F.col("r")).alias("rss"),
-            F.count(F.lit(1)).alias("m"),
+            *(
+                F.expr(e)
+                for e in (
+                    # constant per user: max, never first
+                    *(f"max({c}) AS {c}" for c in carried),
+                    "sum(r * r) AS rss",
+                    "count(1) AS m",
+                    "max(CASE WHEN t = tm THEN y END) AS s_h1",
+                    "max(CASE WHEN t = tm - 1 THEN y END) AS s_h2",
+                    "max(CASE WHEN t = tm THEN r END) AS s_e1",
+                    "max(CASE WHEN t = tm - 1 THEN r END) AS s_e2",
+                )
+            )
         )
-        .join(par.select("user_id", "p", "q"), "user_id")
-        .select(
-            "user_id",
-            F.sqrt(
-                F.col("rss") / F.greatest(F.col("m") - k, F.lit(1))
-            ).alias("sigma"),
-            (
-                F.col("m")
-                * F.log(F.greatest(F.col("rss") / F.col("m"), F.lit(1e-300)))
-                + 2 * k
-            ).alias("aic"),
-        )
-    )
-    tmax = yd.groupBy("user_id").agg(F.max("t").alias("tm"))
-    st = (
-        resid.join(tmax, "user_id")
-        .groupBy("user_id")
-        .agg(
-            F.max(F.when(F.col("t") == F.col("tm"), F.col("y"))).alias("s_h1"),
-            F.max(F.when(F.col("t") == F.col("tm") - 1, F.col("y"))).alias(
-                "s_h2"
-            ),
-            F.max(F.when(F.col("t") == F.col("tm"), F.col("r"))).alias("s_e1"),
-            F.max(F.when(F.col("t") == F.col("tm") - 1, F.col("r"))).alias(
-                "s_e2"
-            ),
+        .selectExpr(
+            "*",
+            f"SQRT(rss / GREATEST(m - {k}, 1)) AS sigma",
+            f"(m * LN(GREATEST(rss / m, 1.0E-300D))) + ({k} * 2) AS aic",
         )
     )
-    base = st.join(par, "user_id").join(sig, "user_id").join(lastx, "user_id")
     # Unrolled 5-step recursion, psi ladder and CI bands composed as
     # LAYERED SQL strings (optimization round 13, guide §7.3 "planning
     # time itself can become the bottleneck"): the Column-API chain here

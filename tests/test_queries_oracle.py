@@ -4,10 +4,11 @@ at sf0.001 (the driver runs the same comparison at sf0.01)."""
 from __future__ import annotations
 
 import pytest
+from conftest import SF_MEDIUM
 
 import __spark_entry__ as entrymod
 from portofolio_maximizer_spark.plans.queries import ORACLE, render_oracle
-from tools.diffcheck import compare
+from tools.diffcheck import compare, duck_connection
 
 QUERIES = entrymod.queries()
 
@@ -20,6 +21,28 @@ def test_query_matches_oracle(name, spark, duck, sf_dir):
         return
     ddf = duck.sql(render_oracle(ORACLE[name], sf_dir)).df()
     issues = compare(sdf, ddf)
+    assert not issues, f"{name}: {issues}"
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "attribution_multiway_table",
+        "training_curation_audits",
+        "training_curation_trades",
+    ],
+)
+def test_query_matches_oracle_nonempty(name, spark):
+    """These return no rows at sf0.001, where the test above compares two
+    empty frames; at sf0.01 they have rows, compared bit-exactly."""
+    sdf = QUERIES[name](spark, SF_MEDIUM).toPandas()
+    assert len(sdf) > 0
+    con = duck_connection(SF_MEDIUM)
+    try:
+        ddf = con.sql(render_oracle(ORACLE[name], SF_MEDIUM)).df()
+    finally:
+        con.close()
+    issues = compare(sdf, ddf, strict=True)
     assert not issues, f"{name}: {issues}"
 
 

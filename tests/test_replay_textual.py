@@ -1,5 +1,6 @@
 """Pin the textual (selectExpr-string) replay builders bit-identically to
-the Column-API references they replaced (optimization round 13).
+the Column-API references they replaced (optimization round 13), and pin
+the one-pass shape of `_arima_replay`.
 
 `_arima_replay` / `_sarimax_replay` / `_samossa_replay` used to compose
 their unrolled forecast recursions as withColumn chains — thousands of
@@ -9,6 +10,14 @@ aliases into exactly those duplicated subtrees, so the Catalyst tree
 (and therefore every IEEE double operation) must be unchanged. This test
 keeps the original Column-API builders as references and asserts exact
 row equality (collected tuples, bitwise doubles) on the sf0.001 data.
+
+`_arima_replay` has since been rebuilt as one pass partitioned by
+``user_id`` (series and component rows unioned, window layers and two
+guarded groupBys in place of the checkpoint-fenced joins). Its Column-API
+reference is still the fenced multi-join builder, so the bit-identity
+test also pins that the one-pass shape keeps the joins' semantics;
+`test_arima_replay_one_pass` pins the shape itself: no job at build
+time, no broadcast, at most two hash exchanges, no checkpoint scan.
 """
 
 from __future__ import annotations
@@ -792,3 +801,30 @@ def test_textual_replay_bit_identical(spark, sf_dir, comp_fn, new_fn, ref_fn):
     want = sorted(map(tuple, ref_fn(s, comp).collect()))
     assert got, "replay produced no rows"
     assert got == want
+
+
+def test_arima_replay_one_pass(spark, sf_dir, tmp_path):
+    """Over components read back from parquet (as the staged path reads
+    them), building `_arima_replay` launches no job — no eager checkpoint
+    fence — and its executed plan has no broadcast, at most two hash
+    exchanges (the series window's and the one above the union) and no
+    checkpoint (``ExistingRDD``) scan."""
+    s = _series(spark, sf_dir).select("user_id", "rn", "value")
+    path = str(tmp_path / "arima_components")
+    arima_hr_components(s).write.parquet(path)
+    comp = spark.read.parquet(path)
+    sc = spark.sparkContext
+    group = "arima_replay_build"
+    sc.setJobGroup(group, group)
+    try:
+        df = _arima_replay(s, comp)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert not sc.statusTracker().getJobIdsForGroup(group)
+    df.write.format("noop").mode("overwrite").save()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    final = plan.split("== Initial Plan ==")[0]
+    assert "BroadcastExchange" not in final
+    assert final.count("Exchange hashpartitioning") <= 2
+    assert "ExistingRDD" not in final

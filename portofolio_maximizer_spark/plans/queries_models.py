@@ -15,7 +15,7 @@ from pyspark.sql import functions as F
 from ..forecast import ar_grid_forecast_fanout, ewma_vol_forecast, ssa_reconstruct
 from ..forecast.models import SEASONAL_PERIODS
 from ..operators import memo
-from ..sources.catalog import load_table
+from ..sources.catalog import load_table, read_parquet
 from .queries import ORACLE, literal_grid, query, r6
 from .queries_stats import _S_SQL, _series
 
@@ -3204,7 +3204,7 @@ def streaming_outer_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
         src = os.path.join(root, "src")
         ev.unionByName(sent).repartition(1).write.parquet(src)
         child = drain_session(spark, partitions=1)
-        schema = child.read.parquet(src).schema
+        schema = read_parquet(child, src).schema
         raw = child.readStream.schema(schema).parquet(src)
         joined = view_purchase_outer_join(raw, horizon="2 hours")
         q = (
@@ -3320,7 +3320,7 @@ def streaming_full_outer_census(spark: SparkSession, sf_dir: str) -> DataFrame:
         src = os.path.join(root, "src")
         ev.unionByName(sent).repartition(1).write.parquet(src)
         child = drain_session(spark, partitions=1)
-        schema = child.read.parquet(src).schema
+        schema = read_parquet(child, src).schema
         raw = child.readStream.schema(schema).parquet(src)
         joined = view_purchase_full_outer_join(raw, horizon="2 hours")
         q = (

@@ -21,7 +21,17 @@ Local testing runs on ``local[N]`` but every conf below is chosen for the
   fit after any RDD Python job starts a second daemon and a second set of
   workers. With them off, every Python path shares the warm workers; a
   UDF error still raises ``PythonException`` with the original exception
-  class and message, and its traceback keeps PySpark's own worker frames.
+  class and message, and its traceback keeps PySpark's own worker frames;
+- Python workers fork from a daemon that has already imported ``pyarrow``
+  and ``pandas`` (``worker_daemon``): pyarrow's pandas shim imports pandas
+  on a process's first ``pa.array``/``pa.table``/``to_numpy``, which every
+  Arrow grouped fit calls, and Spark hands out idle workers first in,
+  first out, so on a cold session each group of a fit would pay that
+  import on a fresh worker. The daemon pays it once, at pool start.
+  Workers get this package's parent directory on their ``PYTHONPATH``, so
+  they can start that daemon whatever the driver's working directory. The
+  daemon conf is static: a session built elsewhere (the driver's vanilla
+  one) keeps PySpark's plain daemon.
 """
 
 from __future__ import annotations
@@ -31,6 +41,8 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+#: the directory holding this package, for the workers' import path
+PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def get_spark(
@@ -69,6 +81,9 @@ def get_spark(
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         # --- Python workers: one pool for RDD and SQL paths (see above) ---
         .config("spark.sql.execution.pyspark.udf.simplifiedTraceback.enabled", "false")
+        # --- Python workers fork with the Arrow stack imported (see above) ---
+        .config("spark.python.daemon.module", "portofolio_maximizer_spark.worker_daemon")
+        .config("spark.executorEnv.PYTHONPATH", PACKAGE_PARENT)
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
     )

@@ -42,6 +42,7 @@ from pyspark.sql.types import (
 )
 
 from ..operators.memo import memoize_checkpoint
+from ..sources.catalog import read_parquet
 
 # NOTE: the events table's ts parquet encoding has changed across testdata
 # generations (TIMESTAMP(NANOS) → plain TIMESTAMP(MICROS)). The stream
@@ -89,7 +90,8 @@ def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     # File-source streams need an explicit schema; take it from the real
     # file footer so a regenerated testdata encoding can never silently
     # produce an empty stream (the watermark would simply never advance).
-    schema = spark.read.parquet(os.path.join(sf_dir, "events.parquet")).schema
+    # The footer is read on the driver: no inference job per stream start.
+    schema = read_parquet(spark, os.path.join(sf_dir, "events.parquet")).schema
     raw = spark.readStream.schema(schema).parquet(_stream_dir(sf_dir))
     ts_type = dict(raw.dtypes)["ts"]
     if ts_type == "bigint":  # legacy nanos encoding

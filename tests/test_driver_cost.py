@@ -67,8 +67,9 @@ def _write_region(d, n: int) -> None:
 @pytest.fixture
 def per_session(tmp_path, sf_dir):
     """The per-session frame sources, by name: ``load_table`` over a fresh
-    parquet file (its first read infers the schema with a job), and the
-    staged ``paper_trades`` read-back of ``_simulated_trades``."""
+    parquet file (its first read takes the schema from the footer, with
+    no job), and the staged ``paper_trades`` read-back of
+    ``_simulated_trades``."""
     from portofolio_maximizer_spark.plans.queries_models import _simulated_trades
 
     d = str(tmp_path)
@@ -84,7 +85,7 @@ def test_second_load_launches_no_job(spark, per_session):
         first = []
         jobs = _jobs_in_group(spark, f"{name}-1", lambda: first.append(load(spark)))
         if name == "region":
-            assert jobs > 0, "the first load should infer the schema with a Spark job"
+            assert jobs == 0, "the first load should read the schema from the footer, with no job"
         again = []
         assert _jobs_in_group(spark, f"{name}-2", lambda: again.append(load(spark))) == 0, name
         assert again[0] is first[0], name

@@ -59,7 +59,17 @@ def grouped_numpy(
     30 cores. The explicit repartition satisfies the hash-clustered
     distribution ``applyInArrow`` needs, so Catalyst inserts no second
     exchange; on a real cluster the same pinning spreads fits across
-    executors regardless of how few bytes the series occupy."""
+    executors regardless of how few bytes the series occupy.
+
+    That protection only holds when the input is NOT already
+    hash-partitioned on ``keys`` into the same partition count. Over
+    ``_series`` (its window's exchange is ``hashpartitioning(user_id,
+    spark.sql.shuffle.partitions)``, and ``get_spark`` sets that to the
+    core count, i.e. ``FIT_FANOUT x`` the default parallelism),
+    ``EnsureRequirements`` drops the repartition as redundant. The fit
+    then reads the window's exchange through AQE's coalesced shuffle
+    read, and at sf0.001 on ``get_spark(cpus=4)`` the arima and cusum
+    fits each ran in 1 task."""
     arrow_schema = to_arrow_schema(schema)
     names = [f.name for f in schema.fields]
     df = df.repartition(

@@ -424,7 +424,11 @@ def sarimax_hr_forecast_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     s+1, s+2 terms by equi-join, with the cross coefficients formed as
     products of the staged (φ, Φ, θ, Θ). Seasonal coefficients never
     enter psi_1..psi_4 (s ≥ 7 > 4), so the variance ladder is the ARIMA
-    unroll unchanged."""
+    unroll unchanged. The Spark side, `_sarimax_replay`, derives the
+    same values in one pass partitioned by ``user_id`` (constant-offset
+    lags in place of the equi-joins, the observed seasonal terms folded
+    wide per horizon step) and shares its forecast tail with
+    `_arima_replay`."""
     from ..forecast.models import sarimax_hr_components
     from .queries import stage_cached
 
@@ -3778,37 +3782,60 @@ def _arima_replay(s: DataFrame, comp: DataFrame) -> DataFrame:
             f"(m * LN(GREATEST(rss / m, 1.0E-300D))) + ({k} * 2) AS aic",
         )
     )
-    # Unrolled 5-step recursion, psi ladder and CI bands composed as
-    # LAYERED SQL strings (optimization round 13, guide §7.3 "planning
-    # time itself can become the bottleneck"): the Column-API chain here
-    # cost thousands of py4j round-trips per DAG build (~3-5 s of driver
-    # wall per cold staging, amplified under the bench's concurrent
-    # pools); each recursion depth is now ONE selectExpr call. The
-    # intermediate predictions / psi terms stay NAMED columns — Catalyst
-    # deliberately does not inline a non-cheap alias referenced more
-    # than once (each pred/psi is evaluated ONCE per row, exactly the
-    # old physical plan; a fully-inlined single-string variant measured
-    # +1.5 s of duplicated per-row evaluation on the final exec).
-    # Bit-identical to the Column-API reference — pinned in
-    # tests/test_replay_textual.py.
-    h1, h2, e1, e2 = "s_h1", "s_h2", "s_e1", "s_e2"
-    psi_src = {
-        1: "(phi1 + th1)",
-        2: "(((phi1 * psi1) + phi2) + th2)",
-        3: "((phi1 * psi2) + (phi2 * psi1))",
-        4: "((phi1 * psi3) + (phi2 * psi2))",
-    }
-    for h in range(1, 6):
-        layer = [
+    return _replay_tail(
+        base,
+        lambda h, h1, h2, e1, e2: [
             f"((((c + (phi1 * {h1})) + (phi2 * {h2}))"
             f" + (th1 * {e1})) + (th2 * {e2})) AS pred{h}"
-        ]
-        if h <= 4:  # psi ladder rides the same layers (psi_h needs psi_{h-1})
-            layer.append(f"{psi_src[h]} AS psi{h}")
-        base = base.selectExpr("*", *layer)
-        if h < 5:
-            h2, h1 = h1, f"pred{h}"
-            e2, e1 = e1, "0.0D"
+        ],
+        "pred",
+    )
+
+
+# psi_h of the ARMA(2, 2) part; seasonal terms never enter psi_1..psi_4
+# because every period is at least 7
+_PSI = {
+    1: "(phi1 + th1)",
+    2: "(((phi1 * psi1) + phi2) + th2)",
+    3: "((phi1 * psi2) + (phi2 * psi1))",
+    4: "((phi1 * psi3) + (phi2 * psi2))",
+}
+
+
+def _replay_tail(
+    base: DataFrame, step, state: str, orders: str = ""
+) -> DataFrame:
+    """The forecast tail both HR replays share: the unrolled 5-step
+    recursion, the psi ladder, the d = 1 integration, the CI bands and
+    the explode of one ``named_struct`` per horizon step.
+
+    ``base`` has one row per user with the parameters, ``d``, ``sigma``,
+    ``aic``, ``last_x`` and the recursion state ``s_h1/s_h2/s_e1/s_e2``.
+    ``step(h, h1, h2, e1, e2)`` returns the SQL layers of step h, given
+    the names of the two state lags and the two residual lags; the first
+    layer defines ``{state}{h}`` (the state the next step reads), the
+    last defines ``pred{h}``. ``orders`` holds the model's struct fields
+    after ``'p', 'd', 'q'``.
+
+    Each recursion depth is ONE selectExpr call (optimization round 13,
+    guide §7.3: the Column-API chain cost thousands of py4j round-trips
+    per DAG build). The intermediate predictions and psi terms stay
+    NAMED columns: Catalyst does not inline a non-cheap alias referenced
+    more than once, so each is evaluated once per row (a fully-inlined
+    single-string variant measured +1.5 s of duplicated per-row
+    evaluation on the final exec). Bit-identical to the Column-API
+    references pinned in tests/test_replay_textual.py."""
+    h1, h2, e1, e2 = "s_h1", "s_h2", "s_e1", "s_e2"
+    for h in range(1, 6):
+        first, *rest = step(h, h1, h2, e1, e2)
+        # the psi ladder rides the first layer (psi_h needs psi_{h-1})
+        base = base.selectExpr(
+            "*", first, *([f"{_PSI[h]} AS psi{h}"] if h <= 4 else [])
+        )
+        for layer in rest:
+            base = base.selectExpr("*", layer)
+        h2, h1 = h1, f"{state}{h}"
+        e2, e1 = e1, "0.0D"
     # cumulative predictions (d = 1 integration) + cumulated-psi terms:
     # sums of the NAMED columns above, all in one layer (psi0/pi0 are
     # the literal 1.0 the old code aliased — cheap aliases inline away)
@@ -3840,7 +3867,7 @@ def _arima_replay(s: DataFrame, comp: DataFrame) -> DataFrame:
         structs.append(
             "named_struct("
             "'p', CAST(p AS INT), 'd', CAST(d AS INT), 'q', CAST(q AS INT), "
-            "'aic', ROUND(aic, 6), "
+            f"{orders}'aic', ROUND(aic, 6), "
             f"'horizon_step', CAST({h} AS INT), "
             f"'yhat', ROUND({yhat}, 6), "
             f"'lo', ROUND(({yhat} - {band}), 6), "
@@ -3854,333 +3881,176 @@ def _arima_replay(s: DataFrame, comp: DataFrame) -> DataFrame:
 
 def _sarimax_replay(s: DataFrame, comp: DataFrame) -> DataFrame:
     """Spark twin of the SARIMAX staged-verification oracle — the
-    seasonal extension of `_arima_replay`. The modeling target z is y
+    seasonal extension of `_arima_replay`, in the same shape: ONE pass
+    partitioned by ``user_id``, no join. The modeling target z is y
     after the winner's seasonal differencing (z = y_t − y_{t−s} when
-    D=1, else y); lag-s and cross-product (s+1, s+2) terms come from a
-    keyed equi-join on z plus window lags (t is dense per key), and
-    because every detected period exceeds horizon+2 the forecast's
-    seasonal, cross-product AND integration terms always reference
-    OBSERVED values — z for the model terms, y for the seasonal
-    integration offset — pivoted wide per horizon step before the
-    unrolled recursion."""
-    from pyspark.sql import Window as W
+    D=1, else y).
 
-    names = [
+    The series rows and the component rows are unioned under one
+    exchange; a per-user window layer spreads the 15 parameters (absent
+    ones 0.0), ``last_x`` and the d-differenced y; a constant-offset lag
+    over the series rows, chosen by ``s_per``, gives z; a
+    ``groupBy(user_id, t)`` pairs z with e (kind-1 row, ``t = idx - 1``);
+    a window ordered by t takes the plain and seasonal lags; one guarded
+    ``groupBy(user_id)`` folds RSS, m, the forecast state and the
+    seasonal terms of the forecast pivoted wide per horizon step. Every
+    step rides the union's exchange.
+
+    The kind-1 rows cover exactly z's t range (the kernel re-indexes the
+    D=1 residuals by +s), so the t values only the series has form a
+    prefix t < s with a NULL z and e, and a lag that reaches into it is
+    NULL, as it was when z and e were inner-joined. A user without
+    kind-0 rows, or without a residual row, drops out. Because every
+    detected period exceeds horizon+2, the forecast's seasonal,
+    cross-product and integration terms all read OBSERVED values — z
+    for the model terms, y for the seasonal integration offset."""
+    par = [
         "p", "d", "q", "sp", "sq", "s_per", "t0", "c",
         "phi1", "phi2", "phis", "th1", "th2", "ths", "sd",
     ]
-    par = (
-        comp.filter(F.col("kind") == 0)
-        .groupBy("user_id")
-        .agg(
-            *[
-                F.expr(
-                    f"coalesce(max(CASE WHEN (idx = {i}) THEN val END), 0.0D)"
-                ).alias(name)
-                for i, name in enumerate(names, 1)
-            ]
-        )
-        .localCheckpoint(eager=False)  # one row per key; feeds 6 branches
-    )
-    wp = W.partitionBy("user_id").orderBy("i")
-    obs = s.select(
-        "user_id",
-        F.col("value").alias("x"),
-        (F.row_number().over(W.partitionBy("user_id").orderBy("rn")) - 1).alias(
-            "i"
-        ),
-        F.count(F.lit(1)).over(W.partitionBy("user_id")).alias("nx"),
-    )
-    lastx = obs.filter(F.col("i") == F.col("nx") - 1).select(
-        "user_id", F.col("x").alias("last_x")
-    )
-    yd = (
-        obs.join(par.select("user_id", "d"), "user_id")
-        .select(
-            "user_id",
-            F.when(F.col("d") == 1, F.col("x") - F.lag("x").over(wp))
-            .otherwise(F.col("x"))
-            .alias("y"),
-            F.when(F.col("d") == 1, F.col("i") - 1)
-            .otherwise(F.col("i"))
-            .alias("t"),
-        )
-        .filter((F.col("t") >= 0) & F.col("y").isNotNull())
-        .localCheckpoint(eager=False)  # fans out to lag/seasonal branches
-    )
-    # modeling target z: the winner's seasonal difference of y — y_{t−s}
-    # fetched as a CONSTANT-offset window lag selected by the per-key
-    # period, not a (user_id, t−s) self-join (optimization round 13,
-    # guide §2.4, same argument as the resid-subtree lags below: yd's t
-    # is dense per key, kept rows have t ≥ s so the lag always exists
-    # exactly where the old LEFT join matched)
-    wt = W.partitionBy("user_id").orderBy("t")
-    wy = W.partitionBy("user_id").orderBy("t")
-    pz = par.select("user_id", "sd", F.col("s_per").cast("long").alias("sl"))
-    y_off = None
-    for sp in SEASONAL_PERIODS:
-        branch = F.lag("y", sp).over(wy)
-        y_off = (
-            F.when(F.col("sl") == sp, branch)
-            if y_off is None
-            else y_off.when(F.col("sl") == sp, branch)
-        )
-    zd = (
-        yd.join(pz, "user_id")
-        # the lag must be materialized BEFORE the t >= sl filter so the
-        # window sees the full series (the filter references t/sd/sl, so
-        # the optimizer cannot push it below the Window node)
-        .withColumn("_y_off", y_off)
-        .filter((F.col("sd") == 0) | (F.col("t") >= F.col("sl")))
-        .select(
-            "user_id",
-            "t",
-            F.when(F.col("sd") == 1, F.col("y") - F.col("_y_off"))
-            .otherwise(F.col("y"))
-            .alias("z"),
-        )
-        .localCheckpoint(eager=False)  # feeds lag join, seasonal join, efit
-    )
-    el = comp.filter(F.col("kind") == 1).select(
-        "user_id", (F.col("idx") - 1).alias("t"), F.col("val").alias("e")
-    )
-    # Seasonal lag-s (and cross-product s+1, s+2) terms as CONSTANT-offset
-    # window lags instead of two (user_id, t−s) equi-joins (optimization
-    # round 13, guide §2.4): t is DENSE per key in this frame (yd emits
-    # consecutive t; the inner join with el matches every t — e_long
-    # covers exactly the modeling range), so row-distance == t-distance
-    # and lag(z, s) IS z_{t−s}; the detected period is one of {7,12,24,
-    # 52} (SEASONAL_PERIODS), so one window pass computes every candidate
-    # offset and the winner is selected per key by s_per after the par
-    # broadcast join. Values identical to the join form (same fetch, nulls
-    # coincide: both miss exactly when t−s precedes the frame), pinned by
-    # the Column-API reference test; the zs/es join exchanges (+ their
-    # sorts) are gone from the plan.
-    je = zd.join(el, ["user_id", "t"]).select(
-        "user_id",
-        "t",
-        "z",
-        "e",
-        F.lag("z", 1).over(wt).alias("z1"),
-        F.lag("z", 2).over(wt).alias("z2"),
-        F.lag("e", 1).over(wt).alias("e1"),
-        F.lag("e", 2).over(wt).alias("e2"),
-        *[
-            F.lag(col, sp + off).over(wt).alias(f"_{col}l{sp + off}")
-            for col in ("z", "e")
-            for sp in SEASONAL_PERIODS
-            for off in (0, 1, 2)
-        ],
-    )
-    jp = je.join(par, "user_id")
+    w = "OVER (PARTITION BY user_id)"
+    wt = "OVER (PARTITION BY user_id ORDER BY t)"
 
-    def _by_period(col: str, off: int):
-        c = None
-        for sp in SEASONAL_PERIODS:
-            branch = F.col(f"_{col}l{sp + off}")
-            c = (
-                F.when(F.col("s_per") == sp, branch)
-                if c is None
-                else c.when(F.col("s_per") == sp, branch)
-            )
-        return c
+    def by_period(branch) -> str:
+        """CASE over the candidate periods; ``branch(sp)`` is period sp's."""
+        whens = " ".join(
+            f"WHEN s_per = {sp} THEN {branch(sp)}" for sp in SEASONAL_PERIODS
+        )
+        return f"CASE {whens} END"
 
-    seasoned = (
-        jp.withColumn("z_s", _by_period("z", 0))
-        .withColumn("z_s1", _by_period("z", 1))
-        .withColumn("z_s2", _by_period("z", 2))
-        .withColumn("e_s", _by_period("e", 0))
-        .withColumn("e_s1", _by_period("e", 1))
-        .withColumn("e_s2", _by_period("e", 2))
+    rows = (
+        s.unionByName(comp, allowMissingColumns=True)
+        .selectExpr(
+            "user_id", "rn", "value", "kind", "idx", "val",
+            *(
+                f"coalesce(max(CASE WHEN kind = 0 AND idx = {i} THEN val END)"
+                f" {w}, 0.0D) AS {n}"
+                for i, n in enumerate(par, 1)
+            ),
+            f"min(kind) {w} AS k0",  # 0 iff the user has parameter rows
+            f"max_by(value, rn) {w} AS last_x",
+            # component rows have a NULL rn and sort first: rn = 1 lags NULL
+            "value - lag(value) OVER (PARTITION BY user_id ORDER BY rn) AS dx",
+        )
+        .selectExpr(
+            "user_id", *par, "last_x", "k0", "kind",
+            "CASE WHEN kind IS NOT NULL THEN idx - 1"
+            " WHEN d = 1 THEN rn - 2 ELSE rn - 1 END AS t",
+            "CASE WHEN kind IS NULL THEN"
+            " (CASE WHEN d = 1 THEN dx ELSE value END) END AS y",
+            "CASE WHEN kind = 1 THEN val END AS e",
+        )
+        .filter(
+            "k0 = 0 AND (kind = 1 OR (kind IS NULL AND t >= 0 AND y IS NOT NULL))"
+        )
+        .selectExpr(
+            "*",
+            f"max(CASE WHEN kind IS NULL THEN t END) {w} AS tm",
+            # y_{t-s}: a constant-offset lag over the series rows (kind
+            # NULL), whose t is dense from 0
+            by_period(
+                lambda sp: f"lag(y, {sp}) OVER (PARTITION BY user_id, kind"
+                " ORDER BY t)"
+            ) + " AS y_off",
+        )
+        .selectExpr(
+            "user_id", *par, "last_x", "tm", "kind", "t", "y", "e",
+            "CASE WHEN kind IS NULL AND (sd = 0 OR t >= CAST(s_per AS BIGINT))"
+            " THEN (CASE WHEN sd = 1 THEN y - y_off ELSE y END) END AS z",
+        )
     )
+    carried = [*par, "last_x", "tm"]
     zf = lambda c: f"coalesce({c}, 0.0D)"  # noqa: E731
     resid = (
-        seasoned.filter(F.col("t") >= F.col("t0"))
-        .withColumn(
-            "r",
-            F.expr(
-                "(z - ((((((((c + (phi1 * z1)) + (phi2 * z2))"
-                f" + (phis * {zf('z_s')}))"
-                f" - (phis * ((phi1 * {zf('z_s1')})"
-                f" + (phi2 * {zf('z_s2')}))))"
-                " + (th1 * e1)) + (th2 * e2))"
-                f" + (ths * {zf('e_s')}))"
-                f" + (ths * ((th1 * {zf('e_s1')})"
-                f" + (th2 * {zf('e_s2')})))))"
-            ),
-        )
-        .select("user_id", "t", "r")
-        .localCheckpoint(eager=True)  # feeds sigma/AIC + the errs vector
-    )
-    k = F.col("p") + F.col("q") + F.col("sp") + F.col("sq") + 1
-    sig = (
-        resid.groupBy("user_id")
+        rows.groupBy("user_id", "t")
         .agg(
-            F.sum(F.col("r") * F.col("r")).alias("rss"),
-            F.count(F.lit(1)).alias("m"),
+            *(F.expr(f"max({c}) AS {c}") for c in [*carried, "y", "z", "e"]),
+            F.expr("count(kind) AS ne"),
         )
-        .join(par.select("user_id", "p", "q", "sp", "sq"), "user_id")
-        .select(
-            "user_id",
-            F.sqrt(F.col("rss") / F.greatest(F.col("m") - k, F.lit(1))).alias(
-                "sigma"
-            ),
-            (
-                F.col("m")
-                * F.log(F.greatest(F.col("rss") / F.col("m"), F.lit(1e-300)))
-                + 2 * k
-            ).alias("aic"),
-        )
-    )
-    tmax = yd.groupBy("user_id").agg(F.max("t").alias("tm"))
-    # the kernel's errs vector: zeros before t0, step-2 residuals after —
-    # on the z domain
-    efit = zd.join(
-        resid.select("user_id", "t", "r"), ["user_id", "t"], "left"
-    ).select("user_id", "t", "z", F.coalesce("r", F.lit(0.0)).alias("ef"))
-    st = (
-        efit.join(tmax, "user_id")
-        .groupBy("user_id")
-        .agg(
-            F.max(F.when(F.col("t") == F.col("tm"), F.col("z"))).alias("s_h1"),
-            F.max(F.when(F.col("t") == F.col("tm") - 1, F.col("z"))).alias(
-                "s_h2"
-            ),
-            F.max(F.when(F.col("t") == F.col("tm"), F.col("ef"))).alias(
-                "s_e1"
-            ),
-            F.max(F.when(F.col("t") == F.col("tm") - 1, F.col("ef"))).alias(
-                "s_e2"
+        .filter("y IS NOT NULL")  # a t only the components have is dropped
+        .selectExpr(
+            "user_id", "t", *carried, "y", "z",
+            # a residual row: t >= t0 with both a z and an e
+            "t >= t0 AND z IS NOT NULL AND ne > 0 AS fit",
+            f"lag(z, 1) {wt} AS z1", f"lag(z, 2) {wt} AS z2",
+            f"lag(e, 1) {wt} AS e1", f"lag(e, 2) {wt} AS e2",
+            *(
+                by_period(lambda sp: f"lag({c}, {sp + off}) {wt}")
+                + f" AS {c}_s{off or ''}"
+                for c in ("z", "e")
+                for off in (0, 1, 2)
             ),
         )
+        .selectExpr(
+            "user_id", "t", *carried, "y", "z", "fit",
+            "CASE WHEN fit THEN"
+            " (z - ((((((((c + (phi1 * z1)) + (phi2 * z2))"
+            f" + (phis * {zf('z_s')}))"
+            f" - (phis * ((phi1 * {zf('z_s1')})"
+            f" + (phi2 * {zf('z_s2')}))))"
+            " + (th1 * e1)) + (th2 * e2))"
+            f" + (ths * {zf('e_s')}))"
+            f" + (ths * ((th1 * {zf('e_s1')})"
+            f" + (th2 * {zf('e_s2')})))))"
+            " END AS r",
+        )
+        # the kernel's errs vector on the z domain: zeros before t0
+        .selectExpr("*", "CASE WHEN z IS NOT NULL THEN coalesce(r, 0.0D) END AS ef")
     )
     # pivot index j maps to t = tm + (j-1) - s: step h reads z at
     # j = h+1 (lag s), h (s+1), h-1 (s+2), plus the y-scale integration
     # offset at j = h+1 — all observed (s >= 7 > horizon)
-    hsteps = s.sparkSession.range(0, 7).select(F.col("id").cast("int").alias("j"))
-    pivsrc = yd.join(
-        efit.select(
-            F.col("user_id").alias("u_p"),
-            F.col("t").alias("t_p"),
-            F.col("z").alias("zv"),
-            F.col("ef").alias("ev"),
-        ),
-        (F.col("user_id") == F.col("u_p")) & (F.col("t") == F.col("t_p")),
-        "left",
-    ).select("user_id", "t", "y", "zv", "ev")
-    seas = (
-        tmax.join(par.select("user_id", "s_per"), "user_id")
-        .crossJoin(F.broadcast(hsteps))
-        .withColumn(
-            "tk", F.col("tm") + F.col("j") - 1 - F.col("s_per").cast("long")
-        )
-        .join(
-            pivsrc.select(
-                F.col("user_id").alias("u2"),
-                F.col("t").alias("t2"),
-                F.col("y").alias("yiv"),
-                F.col("zv").alias("ysv"),
-                F.col("ev").alias("esv"),
-            ),
-            (F.col("user_id") == F.col("u2"))
-            & (F.col("s_per") > 0)
-            & (F.col("tk") == F.col("t2")),
-            "left",
-        )
-        .groupBy("user_id")
-        .agg(
-            *[
-                F.expr(
-                    f"coalesce(max(CASE WHEN (j = {j}) THEN {src} END), 0.0D)"
-                ).alias(f"{pre}{j}")
-                for pre, src in (("syj", "ysv"), ("sej", "esv"), ("yij", "yiv"))
-                for j in range(0, 7)
-            ],
-        )
-    )
+    k = "((((p + q) + sp) + sq) + 1)"
     base = (
-        st.join(par, "user_id")
-        .join(sig, "user_id")
-        .join(lastx, "user_id")
-        .join(seas, "user_id")
+        resid.groupBy("user_id")
+        .agg(
+            *(
+                F.expr(e)
+                for e in (
+                    # constant per user: max, never first
+                    *(f"max({c}) AS {c}" for c in carried),
+                    "sum(r * r) AS rss",
+                    "count_if(fit) AS m",
+                    "max(CASE WHEN t = tm THEN z END) AS s_h1",
+                    "max(CASE WHEN t = tm - 1 THEN z END) AS s_h2",
+                    "max(CASE WHEN t = tm THEN ef END) AS s_e1",
+                    "max(CASE WHEN t = tm - 1 THEN ef END) AS s_e2",
+                    *(
+                        "coalesce(max(CASE WHEN s_per > 0 AND"
+                        f" t = tm + {j - 1} - CAST(s_per AS BIGINT)"
+                        f" THEN {src} END), 0.0D) AS {pre}{j}"
+                        for pre, src in (("syj", "z"), ("sej", "ef"), ("yij", "y"))
+                        for j in range(0, 7)
+                    ),
+                )
+            )
+        )
+        .filter("m > 0")
+        .selectExpr(
+            "*",
+            f"SQRT(rss / GREATEST(m - {k}, 1)) AS sigma",
+            f"(m * LN(GREATEST(rss / m, 1.0E-300D))) + ({k} * 2) AS aic",
+        )
     )
-    # Unrolled recursion + psi ladder + CI bands as LAYERED SQL strings
-    # (optimization round 13): same scheme as `_arima_replay` — one
-    # selectExpr call per recursion depth, intermediate predz/pred/psi
-    # kept as NAMED columns so each is evaluated once per row exactly
-    # like the old withColumn chain (a fully-inlined variant measured
-    # +1.5 s of duplicated per-row evaluation on this replay's exec).
-    # Bit-identical — pinned against the Column-API reference in
-    # tests/test_replay_textual.py.
-    h1, h2, e1, e2 = "s_h1", "s_h2", "s_e1", "s_e2"
-    psi_src = {
-        1: "(phi1 + th1)",
-        2: "(((phi1 * psi1) + phi2) + th2)",
-        3: "((phi1 * psi2) + (phi2 * psi1))",
-        4: "((phi1 * psi3) + (phi2 * psi2))",
-    }
-    for h in range(1, 6):
-        # the recursion runs on the z scale; predz feeds the state,
-        # predy adds the observed seasonal-integration offset
-        layer = [
+    # the recursion runs on the z scale; predz feeds the state, pred adds
+    # the observed seasonal-integration offset
+    return _replay_tail(
+        base,
+        lambda h, h1, h2, e1, e2: [
             f"((((((((c + (phi1 * {h1})) + (phi2 * {h2}))"
             f" + (phis * syj{h + 1}))"
             f" - (phis * ((phi1 * syj{h}) + (phi2 * syj{h - 1}))))"
             f" + (th1 * {e1})) + (th2 * {e2}))"
             f" + (ths * sej{h + 1}))"
             f" + (ths * ((th1 * sej{h}) + (th2 * sej{h - 1}))))"
-            f" AS predz{h}"
-        ]
-        if h <= 4:
-            layer.append(f"{psi_src[h]} AS psi{h}")
-        base = base.selectExpr("*", *layer).selectExpr(
-            "*",
+            f" AS predz{h}",
             f"(predz{h} + (CASE WHEN (sd = 1)"
             f" THEN yij{h + 1} ELSE 0.0D END)) AS pred{h}",
-        )
-        if h < 5:
-            h2, h1 = h1, f"predz{h}"
-            e2, e1 = e1, "0.0D"
-    psi = ["1.0D"] + [f"psi{j}" for j in range(1, 5)]
-    pi, acc = [], None
-    for j in range(5):
-        acc = psi[j] if acc is None else f"({acc} + {psi[j]})"
-        pi.append(acc)
-    cpred_layer, cum = [], "0.0D"
-    for h in range(1, 6):
-        cum = f"({cum} + pred{h})"
-        cpred_layer.append(f"{cum} AS cpred{h}")
-    base = base.selectExpr("*", *cpred_layer)
-
-    def vfac(h):
-        d0, d1 = "0.0D", "0.0D"
-        for j in range(h):
-            d0 = f"({d0} + ({psi[j]} * {psi[j]}))"
-            d1 = f"({d1} + ({pi[j]} * {pi[j]}))"
-        return f"(CASE WHEN (d = 1) THEN {d1} ELSE {d0} END)"
-
-    structs = []
-    for h in range(1, 6):
-        yhat = (
-            f"(CASE WHEN (d = 1) THEN (last_x + cpred{h})"
-            f" ELSE pred{h} END)"
-        )
-        band = f"(1.96D * SQRT(((sigma * sigma) * {vfac(h)})))"
-        structs.append(
-            "named_struct("
-            "'p', CAST(p AS INT), 'd', CAST(d AS INT), 'q', CAST(q AS INT), "
-            "'sp', CAST(sp AS INT), 'sq', CAST(sq AS INT), "
-            "'sd', CAST(sd AS INT), 's', CAST(s_per AS INT), "
-            "'aic', ROUND(aic, 6), "
-            f"'horizon_step', CAST({h} AS INT), "
-            f"'yhat', ROUND({yhat}, 6), "
-            f"'lo', ROUND(({yhat} - {band}), 6), "
-            f"'hi', ROUND(({yhat} + {band}), 6), "
-            "'sigma', ROUND(sigma, 6))"
-        )
-    return base.selectExpr(
-        "user_id", f"explode(array({', '.join(structs)})) AS v"
-    ).select("user_id", "v.*")
+        ],
+        "predz",
+        "'sp', CAST(sp AS INT), 'sq', CAST(sq AS INT), "
+        "'sd', CAST(sd AS INT), 's', CAST(s_per AS INT), ",
+    )
 
 
 def _samossa_replay(s: DataFrame, comp: DataFrame) -> DataFrame:

@@ -1,6 +1,6 @@
 """Pin the textual (selectExpr-string) replay builders bit-identically to
 the Column-API references they replaced (optimization round 13), and pin
-the one-pass shape of `_arima_replay`.
+the one-pass shape of `_arima_replay` and `_sarimax_replay`.
 
 `_arima_replay` / `_sarimax_replay` / `_samossa_replay` used to compose
 their unrolled forecast recursions as withColumn chains — thousands of
@@ -11,13 +11,15 @@ aliases into exactly those duplicated subtrees, so the Catalyst tree
 keeps the original Column-API builders as references and asserts exact
 row equality (collected tuples, bitwise doubles) on the sf0.001 data.
 
-`_arima_replay` has since been rebuilt as one pass partitioned by
-``user_id`` (series and component rows unioned, window layers and two
-guarded groupBys in place of the checkpoint-fenced joins). Its Column-API
-reference is still the fenced multi-join builder, so the bit-identity
-test also pins that the one-pass shape keeps the joins' semantics;
-`test_arima_replay_one_pass` pins the shape itself: no job at build
-time, no broadcast, at most two hash exchanges, no checkpoint scan.
+`_arima_replay` and `_sarimax_replay` have since been rebuilt as one
+pass partitioned by ``user_id`` (series and component rows unioned,
+window layers and two guarded groupBys in place of the
+checkpoint-fenced joins), and share one forecast tail. Their Column-API
+references are still the fenced multi-join builders, so the
+bit-identity test also pins that the one-pass shape keeps the joins'
+semantics; `test_replay_one_pass` pins the shape itself for both: no job
+at build time, no broadcast, at most two hash exchanges, no checkpoint
+scan.
 """
 
 from __future__ import annotations
@@ -803,21 +805,29 @@ def test_textual_replay_bit_identical(spark, sf_dir, comp_fn, new_fn, ref_fn):
     assert got == want
 
 
-def test_arima_replay_one_pass(spark, sf_dir, tmp_path):
+@pytest.mark.parametrize(
+    "comp_fn, replay",
+    [
+        (arima_hr_components, _arima_replay),
+        (sarimax_hr_components, _sarimax_replay),
+    ],
+    ids=["arima", "sarimax"],
+)
+def test_replay_one_pass(spark, sf_dir, tmp_path, comp_fn, replay):
     """Over components read back from parquet (as the staged path reads
-    them), building `_arima_replay` launches no job — no eager checkpoint
+    them), building the replay launches no job — no eager checkpoint
     fence — and its executed plan has no broadcast, at most two hash
     exchanges (the series window's and the one above the union) and no
     checkpoint (``ExistingRDD``) scan."""
     s = _series(spark, sf_dir).select("user_id", "rn", "value")
-    path = str(tmp_path / "arima_components")
-    arima_hr_components(s).write.parquet(path)
+    path = str(tmp_path / "components")
+    comp_fn(s).write.parquet(path)
     comp = spark.read.parquet(path)
     sc = spark.sparkContext
-    group = "arima_replay_build"
+    group = f"{replay.__name__}_build"
     sc.setJobGroup(group, group)
     try:
-        df = _arima_replay(s, comp)
+        df = replay(s, comp)
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     sc._jsc.sc().listenerBus().waitUntilEmpty()

@@ -32,6 +32,12 @@ from pyspark.sql.types import StructType
 #: (arima_components 2.8 -> 8.1 s, garch_grid_params 4.8 -> 7.6 s in
 #: the full cold bench) — 4x the applyInArrow tasks means 4x the
 #: per-task Arrow/worker handoff, which concurrent jobs amplify.
+#: Most of that handoff was PySpark's per-task ``setup_spark_files``
+#: re-reading the index of every archive on the worker's path: 105-121 ms
+#: a task, against ~1 ms of kernel per group at sf0.001. Since
+#: ``worker_daemon`` drops those archives it reads 0.1-0.2 ms median
+#: (4-vCPU box), so the 4x result above predates it; re-measuring the
+#: fan-out is the next step of ROADMAP item 2.
 #: Per-key results are partitioning-independent either way
 #: (grouped_numpy: one kernel call per key; partitioned_numpy: per-key
 #: rows through elementwise math, pinned by the GARCH partition tests).

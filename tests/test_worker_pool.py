@@ -3,15 +3,18 @@ the daemon, and a kernel error still surfaces with its class and message."""
 
 from __future__ import annotations
 
+import importlib.metadata
 import os
 import subprocess
 import sys
+import zipfile
 
 import pytest
 from pyspark.errors import PythonException
 from pyspark.sql.types import LongType, StructField, StructType
 
 from portofolio_maximizer_spark.operators.arrowgroup import grouped_numpy
+from portofolio_maximizer_spark.worker_daemon import lean_path
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -88,7 +91,9 @@ def test_workers_fork_with_arrow_stack_loaded():
     pays the import. Inside a group the kernel cannot tell (the Arrow
     calls before it import pandas anyway), so each group reads its
     parent's (the daemon's) memory map for both packages' extension
-    modules."""
+    modules. With the installed pyspark matching Spark's ``pyspark.zip``,
+    the workers import pyspark from a directory and hold no
+    ``zipimporter`` for a task's ``invalidate_caches()`` to re-read."""
     script = f"""
 import os, sys
 sys.path.insert(0, {ROOT!r})
@@ -98,13 +103,17 @@ from portofolio_maximizer_spark.session import get_spark
 spark = get_spark("worker-preload", cpus=2)
 
 def kernel(cols):
+    import pyspark, zipimport
     with open(f"/proc/{{os.getppid()}}/maps") as f:
         maps = f.read()
-    return [(int(cols["k"][0]), "/pandas/_libs/" in maps, "/pyarrow/lib." in maps)]
+    zipped = not os.path.isfile(pyspark.__file__)
+    importers = sum(isinstance(v, zipimport.zipimporter) for v in sys.path_importer_cache.values())
+    return [(int(cols["k"][0]), "/pandas/_libs/" in maps, "/pyarrow/lib." in maps, zipped, importers)]
 
 df = spark.range(40).selectExpr("id % 8 AS k", "id AS v")
 schema = StructType(
-    [StructField("k", LongType()), StructField("pandas", BooleanType()), StructField("pyarrow", BooleanType())]
+    [StructField("k", LongType()), StructField("pandas", BooleanType()), StructField("pyarrow", BooleanType()),
+     StructField("zipped", BooleanType()), StructField("importers", LongType())]
 )
 rows = sorted(grouped_numpy(df, ["k"], schema, kernel).collect())
 spark.stop()
@@ -115,7 +124,36 @@ print("groups", [tuple(r) for r in rows])
         [sys.executable, "-c", script], capture_output=True, text=True, env=env, timeout=300
     )
     assert out.returncode == 0, out.stderr[-3000:]
-    assert out.stdout.strip().splitlines()[-1] == "groups " + str([(k, True, True) for k in range(8)])
+    assert out.stdout.strip().splitlines()[-1] == "groups " + str([(k, True, True, False, 0) for k in range(8)])
+
+
+def test_lean_path_drops_only_archives_that_add_nothing(tmp_path):
+    """The daemon's path filter drops ``pyspark.zip`` only when the
+    installed pyspark is the release it names, and a jar only when it
+    holds no Python; everything else stays, in order."""
+
+    def archive(rel, members):
+        path = tmp_path / rel
+        path.parent.mkdir(parents=True, exist_ok=True)
+        with zipfile.ZipFile(path, "w") as z:
+            for name, text in members.items():
+                z.writestr(name, text)
+        return str(path)
+
+    def pyspark_zip(rel, version):
+        return archive(rel, {"pyspark/version.py": f"__version__: str = {version!r}\n"})
+
+    installed = importlib.metadata.version("pyspark")
+    matching = pyspark_zip("same/pyspark.zip", installed)
+    other = pyspark_zip("other/pyspark.zip", "0.0.0")
+    py4j = archive("py4j-0.0.0-src.zip", {"py4j/__init__.py": ""})
+    bare_jar = archive("core.jar", {"org/apache/spark/SparkContext.class": "x"})
+    py_jar = archive("py.jar", {"org/A.class": "x", "pkg/mod.py": ""})
+    broken = tmp_path / "broken" / "pyspark.zip"
+    broken.parent.mkdir()
+    broken.write_bytes(b"not a zip")
+    paths = [str(tmp_path), matching, other, py4j, bare_jar, py_jar, str(broken), ROOT]
+    assert lean_path(paths) == [str(tmp_path), other, py4j, py_jar, str(broken), ROOT]
 
 
 def test_kernel_error_keeps_class_and_message(spark):
